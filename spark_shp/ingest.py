@@ -112,14 +112,23 @@ def _ragged_level(arr):
     return pc.list_flatten(arr), off
 
 
-def _geojson_geometry_strings(gtypes, coords) -> list:
+# nesting levels each type unwraps to its GeoJSON coordinates — the first
+# part (1), ring (2) and point (3) it reads must exist
+_UNWRAP_DEPTH = {"Point": 3, "MultiPoint": 2, "LineString": 2,
+                 "MultiLineString": 1, "Polygon": 1}
+
+
+def _geojson_geometry_strings(gtypes, coords, layers, fids) -> list:
     """Per-feature GeoJSON geometry JSON strings, assembled from the
     Arrow rank-4 ListArray WITHOUT walking nested Python objects: every
     coordinate float in the batch serializes in ONE ``json.dumps`` of the
     flat value buffer (C shortest-repr, identical bytes to the per-row
     encoder), then each nesting level is a string join over offset
     spans. ``gtypes`` picks each feature's unwrap depth exactly as
-    :func:`denormalize_rank4` does."""
+    :func:`denormalize_rank4` does. A typed feature whose first part,
+    ring or point is missing raises ValueError naming the feature
+    (``layers[i]``/``fids[i]``); its span offset would otherwise point at
+    the next feature's values."""
     import json
 
     lvl3, off1 = _ragged_level(coords)      # feature → parts
@@ -143,7 +152,15 @@ def _geojson_geometry_strings(gtypes, coords) -> list:
     for i, t in enumerate(gtypes):
         if t is None or not coords[i].is_valid:
             out.append("null")
-        elif t == "Point":
+            continue
+        depth, p = _UNWRAP_DEPTH.get(t, 0), off1[i]
+        if ((depth >= 1 and off1[i + 1] == p)
+                or (depth >= 2 and off2[p + 1] == off2[p])
+                or (depth >= 3 and off3[off2[p] + 1] == off3[off2[p]])):
+            raise ValueError(
+                f"feature {layers[i]}#{fids[i]}: {t} has an empty part, "
+                "ring or point list")
+        if t == "Point":
             out.append('{"type":"Point","coordinates":'
                        + pt_strs[off3[off2[off1[i]]]] + "}")
         elif t in ("MultiPoint", "LineString"):
@@ -179,9 +196,9 @@ def write_geojson(features: DataFrame, out_dir: str) -> None:
             names = rb.schema.names
             col = {n: rb.column(i) for i, n in enumerate(names)}
             gtypes = col["geom_type"].to_pylist()
-            geoms = _geojson_geometry_strings(gtypes,
-                                              col["coordinates"])
             fids = col["feature_id"].to_numpy(zero_copy_only=False)
+            geoms = _geojson_geometry_strings(
+                gtypes, col["coordinates"], col["layer"], fids)
             props = col["properties"].to_pylist()
             vals = [
                 '{"type":"Feature","geometry":%s,"properties":%s,"id":%d}'

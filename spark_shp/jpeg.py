@@ -253,9 +253,11 @@ def _category(v: int) -> int:
 # numpy — category/code/magnitude per coefficient via fancy indexing, ZRL
 # expansion via np.repeat, MCU interleaving via one stable lexsort of
 # (block-visit-key, intra-block sequence), and bit packing via a repeat/
-# cumsum scatter + np.packbits + vectorized 0xFF stuffing. Bit-identical
-# to the original per-symbol writer by construction (same symbol order,
-# same canonical codes, same 1-bit flush padding per restart segment).
+# cumsum scatter + np.packbits + vectorized 0xFF stuffing. Same symbol
+# order, canonical codes and 1-bit flush padding per restart segment as the
+# original per-symbol writer, but NOT byte-identical to it: RSTn markers
+# only separate segments, so none follows the final one
+# (test_no_trailing_restart_marker).
 
 
 def _enc_tables(codes: dict, size: int):

@@ -49,7 +49,7 @@ _TAIL = [
     "event_dedup",            # C12 variant: tumbling/session windows stay
                               #   in-window and user_session_features adds
                               #   stateful C12 (displaced r5)
-    "shp_webmerc_reproject",  # A12: all five families driver-gated via the
+    "shp_webmerc_reproject",  # A12: all 25 families kept in-window by the
     "shp_utm_reproject",      #   combined shp_reproject_families row
     "shp_lcc_reproject",      # A12 (same family)
     "shp_albers_reproject",   # A12 (same family)

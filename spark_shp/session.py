@@ -40,5 +40,8 @@ def get_spark(app: str = "spark_shp", cpus: int | None = None,
         .config("spark.driver.extraJavaOptions", "-XX:-DontCompileHugeMethods")
         .config("spark.executor.extraJavaOptions", "-XX:-DontCompileHugeMethods")
         .config("spark.ui.enabled", "false")
+        # static conf (read at session build): console progress bars land in
+        # any JSON result captured together with stderr
+        .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )

@@ -1,6 +1,7 @@
 """Distributed shapefile ingest e2e (A19 + geometry-DF mapping)."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from spark_shp import ingest
@@ -85,6 +86,17 @@ def test_points_fast_path_matches_parity_and_falls_back(spark, tmp_path):
     slow = parser.parse_shp(blob)
     assert list(rec_no) == list(range(1, 201))
     assert [[a, b] for a, b in zip(x, y)] == [g["coordinates"] for g in slow]
+
+    # the same, bit for bit, under every reprojection fixture's transform
+    from spark_shp.queries_shp import _REPROJECT_ROWS
+    for spec in _REPROJECT_ROWS:
+        xm, ym = spec.xy(np.arange(spec.n, dtype=np.int64))
+        prj = writer.write_shp([(writer.POINT, (float(a), float(b)))
+                                for a, b in zip(xm, ym)])
+        trans = parser.projection_from_wkt(spec.wkt)
+        _, lon, lat = parser.parse_shp_points_columns(prj, trans)
+        assert [[a, b] for a, b in zip(lon, lat)] == [
+            g["coordinates"] for g in parser.parse_shp(prj, trans)], spec.name
 
     # null shape interleaved → not uniform → fast path refuses
     mixed = writer.write_shp([(writer.POINT, (1.0, 2.0)), (writer.NULL, None),
@@ -345,3 +357,12 @@ def test_geojson_sink_roundtrip(spark, tmp_path):
 
     a, b = canon(feats), canon(back)
     assert len(a) > 0 and a == b
+
+    # a typed Point with no parts fails naming the feature instead of
+    # serializing the next feature's point (one partition: one batch)
+    bad = spark.createDataFrame(
+        [(7, "bad", "Point", [], None, False, None),
+         (8, "bad", "Point", [[[[1.0, 2.0]]]], None, False, None)],
+        ingest.GEOM_SCHEMA).coalesce(1)
+    with pytest.raises(Exception, match="feature bad#7"):
+        ingest.write_geojson(bad, str(tmp_path / "gj_bad"))
