@@ -60,8 +60,8 @@ CLIP_SCHEMA = T.StructType([
 ])
 
 
-def _decode_stack_u8(pdf: pd.DataFrame, idx: np.ndarray, w: int, h: int,
-                     fmt: str) -> np.ndarray:
+def _decode_stack(pdf: pd.DataFrame, idx: np.ndarray, w: int, h: int,
+                  fmt: str) -> np.ndarray:
     """Decode a same-(w,h,fmt) group into ONE (n,h,w,3) uint8 stack — raw
     images as a single frombuffer over concatenated payloads; compressed
     formats per stream (zlib is inherently per-stream), math on the stack."""
@@ -72,6 +72,46 @@ def _decode_stack_u8(pdf: pd.DataFrame, idx: np.ndarray, w: int, h: int,
         return flat.reshape(len(idx), h, w, 3)
     return np.stack([codecs.decode(bytes(blobs[i]), w, h, fmt)
                      for i in idx])
+
+
+def shape_grouped(images: DataFrame, schema: T.StructType, kernel,
+                  cols=()) -> DataFrame:
+    """The one Arrow-batch loop of every shape-grouped image kernel
+    (here and in multimodal).
+
+    Within each batch, rows group by (w, h, fmt) and each group decodes
+    ONCE into a (k, h, w, 3) uint8 stack ``px``. ``kernel(px, grp, w, h,
+    fmt)`` gets the stack plus the group's rows ``grp`` (a dict of numpy
+    arrays: image_id and the extra input ``cols``, in stack order) and
+    returns a list of output rows shaped like ``schema``, holding the
+    image's position in the group (0..k-1) in the ``image_id`` slot. The
+    loop swaps in the image_id and yields one DataFrame per batch, rows
+    in input order (an image's own rows keep the kernel's order)."""
+    names = schema.fieldNames()
+    slot = names.index("image_id")
+
+    def per_batch(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            cols_np = {c: pdf[c].to_numpy() for c in ("image_id", *cols)}
+            rows, pos = [], []
+            for (w, h, fmt), idx in (
+                    pdf.groupby(["w", "h", "fmt"]).indices.items()):
+                w, h = int(w), int(h)
+                got = kernel(_decode_stack(pdf, idx, w, h, fmt),
+                             {c: a[idx] for c, a in cols_np.items()},
+                             w, h, fmt)
+                rows += got
+                pos.append(idx[[r[slot] for r in got]])    # batch rows
+            pos = np.concatenate(pos)
+            order = np.argsort(pos, kind="stable")
+            out = pd.DataFrame([rows[k] for k in order], columns=names)
+            out["image_id"] = cols_np["image_id"][pos[order]]
+            yield out
+
+    return (images.select("image_id", "bytes", "w", "h", "fmt", *cols)
+            .mapInPandas(per_batch, schema))
 
 
 def raster_vector_clip(images: DataFrame, poly_edges: dict[int, np.ndarray],
@@ -87,56 +127,42 @@ def raster_vector_clip(images: DataFrame, poly_edges: dict[int, np.ndarray],
     spark = images.sparkSession
     bc = spark.sparkContext.broadcast(poly_edges)
 
-    def work(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            ids = pdf["image_id"].to_numpy()
-            lons = pdf["lon"].to_numpy(dtype=np.float64)
-            lats = pdf["lat"].to_numpy(dtype=np.float64)
-            all_pids = pdf[poly_col].to_numpy(dtype=np.int64)
-            out = [None] * n
-            # group at (w,h,fmt) so the decode stack amortizes; polys are
-            # subgrouped inside (a (w,h,fmt,poly) groupby fragments mixed
-            # batches into ~2-image groups and stacking never pays off)
-            for (w, h, fmt), idx in (
-                    pdf.groupby(["w", "h", "fmt"]).indices.items()):
-                w, h = int(w), int(h)
-                px = _decode_stack_u8(pdf, idx, w, h, fmt)   # (k,h,w,3)
-                k = len(idx)
-                pids = all_pids[idx]
-                xs = (np.arange(w) - w / 2 + 0.5) * deg_per_px
-                ys = (h / 2 - np.arange(h) - 0.5) * deg_per_px
-                mask = np.zeros((k, h, w), dtype=bool)
-                for pid in np.unique(pids):
-                    edges = bc.value.get(int(pid))
-                    if edges is None or not len(edges):
-                        continue               # mask stays all-outside
-                    sel = np.nonzero(pids == pid)[0]
-                    gx, gy = np.broadcast_arrays(
-                        lons[idx[sel]][:, None, None] + xs[None, None, :],
-                        lats[idx[sel]][:, None, None] + ys[None, :, None])
-                    inside = (geom.crossings_chunked(
-                        np.ascontiguousarray(gx).ravel(),
-                        np.ascontiguousarray(gy).ravel(),
-                        edges) % 2 == 1)
-                    mask[sel] = inside.reshape(len(sel), h, w)
-                clipped = px.copy()
-                clipped[~mask] = 0
-                n_in = mask.sum(axis=(1, 2)).astype(np.int64)
-                sums = clipped.sum(axis=(1, 2, 3), dtype=np.int64)
-                enc_fmt = "raw" if fmt == "qb" else fmt
-                for j, i in enumerate(idx):
-                    out[i] = (ids[i], int(pids[j]),
-                              codecs.encode(clipped[j], enc_fmt),
-                              int(n_in[j]), w * h,
-                              float(sums[j]) / (n_in[j] * 3)
-                              if n_in[j] else 0.0)
-            yield pd.DataFrame(out, columns=[f.name for f in CLIP_SCHEMA])
+    # grouped at (w,h,fmt) so the decode stack amortizes; polys are
+    # subgrouped inside (a (w,h,fmt,poly) groupby fragments mixed batches
+    # into ~2-image groups and stacking never pays off)
+    def kernel(px, grp, w, h, fmt):                     # px: (k,h,w,3)
+        k = len(px)
+        lons = grp["lon"].astype(np.float64)
+        lats = grp["lat"].astype(np.float64)
+        pids = grp[poly_col].astype(np.int64)
+        xs = (np.arange(w) - w / 2 + 0.5) * deg_per_px
+        ys = (h / 2 - np.arange(h) - 0.5) * deg_per_px
+        mask = np.zeros((k, h, w), dtype=bool)
+        for pid in np.unique(pids):
+            edges = bc.value.get(int(pid))
+            if edges is None or not len(edges):
+                continue               # mask stays all-outside
+            sel = np.nonzero(pids == pid)[0]
+            gx, gy = np.broadcast_arrays(
+                lons[sel][:, None, None] + xs[None, None, :],
+                lats[sel][:, None, None] + ys[None, :, None])
+            inside = (geom.crossings_chunked(
+                np.ascontiguousarray(gx).ravel(),
+                np.ascontiguousarray(gy).ravel(),
+                edges) % 2 == 1)
+            mask[sel] = inside.reshape(len(sel), h, w)
+        clipped = px.copy()
+        clipped[~mask] = 0
+        n_in = mask.sum(axis=(1, 2)).astype(np.int64)
+        sums = clipped.sum(axis=(1, 2, 3), dtype=np.int64)
+        enc_fmt = "raw" if fmt == "qb" else fmt
+        return [(j, int(pids[j]), codecs.encode(clipped[j], enc_fmt),
+                 int(n_in[j]), w * h,
+                 float(sums[j]) / (n_in[j] * 3) if n_in[j] else 0.0)
+                for j in range(k)]
 
-    cols = ["image_id", "bytes", "w", "h", "fmt", "lon", "lat", poly_col]
-    return images.select(*cols).mapInPandas(work, CLIP_SCHEMA)
+    return shape_grouped(images, CLIP_SCHEMA, kernel,
+                         ("lon", "lat", poly_col))
 
 
 PHASH_SCHEMA = T.StructType([
@@ -153,43 +179,27 @@ def phash_verify(images: DataFrame) -> DataFrame:
     compare to the stored ``phash`` column (hamming ≤ 4 tolerated for the
     lossy 'qb' format; exact for lossless)."""
 
-    def work(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            ids = pdf["image_id"].to_numpy()
-            stored = pdf["phash"].to_numpy(dtype=np.int64)
-            fmts = pdf["fmt"].to_numpy()
-            out = [None] * n
-            for (w, h, fmt), idx in (
-                    pdf.groupby(["w", "h", "fmt"]).indices.items()):
-                w, h = int(w), int(h)
-                px = _decode_stack_u8(pdf, idx, w, h, fmt)
-                k = len(idx)
-                gray = px.astype(np.float64).mean(axis=3)       # (k,h,w)
-                hh, ww = (h // 8) * 8, (w // 8) * 8
-                g = (gray[:, :hh, :ww]
-                     .reshape(k, 8, hh // 8, 8, ww // 8)
-                     .mean(axis=(2, 4)))                        # (k,8,8)
-                bits = (g > g.mean(axis=(1, 2), keepdims=True)).reshape(k, 64)
-                # MSB-first pack, identical to codecs.phash's shift loop
-                hashes = (np.packbits(bits, axis=1).copy()
-                          .view(">u8").reshape(k).astype(np.uint64)
-                          .view(np.int64))
-                xor = (hashes ^ stored[idx]).view(np.uint64)
-                ham = (np.unpackbits(xor.view(np.uint8))
-                       .reshape(k, 64).sum(axis=1).astype(np.int64))
-                for j, i in enumerate(idx):
-                    ok = (ham[j] == 0 if fmts[i] in ("raw", "png")
-                          else ham[j] <= 4)
-                    out[i] = (ids[i], int(stored[i]), int(hashes[j]),
-                              bool(ok), int(ham[j]))
-            yield pd.DataFrame(out,
-                               columns=[f.name for f in PHASH_SCHEMA])
+    def kernel(px, grp, w, h, fmt):
+        k = len(px)
+        stored = grp["phash"].astype(np.int64)
+        gray = px.astype(np.float64).mean(axis=3)       # (k,h,w)
+        hh, ww = (h // 8) * 8, (w // 8) * 8
+        m = (gray[:, :hh, :ww]
+             .reshape(k, 8, hh // 8, 8, ww // 8)
+             .mean(axis=(2, 4)))                        # (k,8,8)
+        bits = (m > m.mean(axis=(1, 2), keepdims=True)).reshape(k, 64)
+        # MSB-first pack, identical to codecs.phash's shift loop
+        hashes = (np.packbits(bits, axis=1).copy()
+                  .view(">u8").reshape(k).astype(np.uint64)
+                  .view(np.int64))
+        xor = (hashes ^ stored).view(np.uint64)
+        ham = (np.unpackbits(xor.view(np.uint8))
+               .reshape(k, 64).sum(axis=1).astype(np.int64))
+        ok = ham == 0 if fmt in ("raw", "png") else ham <= 4
+        return [(j, int(stored[j]), int(hashes[j]), bool(ok[j]),
+                 int(ham[j])) for j in range(k)]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt", "phash")
-            .mapInPandas(work, PHASH_SCHEMA))
+    return shape_grouped(images, PHASH_SCHEMA, kernel, ("phash",))
 
 
 DECODE_STATS_SCHEMA = T.StructType([
@@ -204,23 +214,9 @@ def decode_stats(images: DataFrame) -> DataFrame:
     """B11 exercise path: decode every image, emit pixel stats (also the
     kernel the lineage bench uses for bytes-decoded metrics)."""
 
-    def work(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            ids = pdf["image_id"].to_numpy()
-            fmts = pdf["fmt"].to_numpy()
-            out = [None] * n
-            for (w, h, fmt), idx in (
-                    pdf.groupby(["w", "h", "fmt"]).indices.items()):
-                w, h = int(w), int(h)
-                px = _decode_stack_u8(pdf, idx, w, h, fmt)
-                means = px.mean(axis=(1, 2, 3))
-                for j, i in enumerate(idx):
-                    out[i] = (ids[i], fmts[i], float(means[j]), h * w * 3)
-            yield pd.DataFrame(
-                out, columns=[f.name for f in DECODE_STATS_SCHEMA])
+    def kernel(px, grp, w, h, fmt):
+        means = px.mean(axis=(1, 2, 3))
+        return [(j, fmt, float(means[j]), h * w * 3)
+                for j in range(len(px))]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, DECODE_STATS_SCHEMA))
+    return shape_grouped(images, DECODE_STATS_SCHEMA, kernel)

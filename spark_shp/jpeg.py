@@ -924,9 +924,9 @@ def _reconstruct(frame, scan, qts, zz_list, mcux, mcuy) -> np.ndarray:
 def jpeg_decode_batch(blobs, min_batch: int = 16) -> list:
     """Iterable of JFIF byte strings → list of (h, w, 3) uint8 arrays,
     identical to per-blob :func:`jpeg_decode`. Streams sharing a frame
-    config (dims, sampling, tables, restart cadence) decode together
-    through the multi-stream walker; leftovers and sub-``min_batch``
-    groups fall back to the scalar path."""
+    config (dims, sampling, tables, SOS table bindings, restart cadence)
+    decode together through the multi-stream walker; leftovers and
+    sub-``min_batch`` groups fall back to the scalar path."""
     blobs = list(blobs)
     parsed = [_parse_stream(b) for b in blobs]
     groups: dict = {}
@@ -937,6 +937,7 @@ def jpeg_decode_batch(blobs, min_batch: int = 16) -> list:
                      for c in frame["comps"]),
                tuple(sorted((k, v.tobytes()) for k, v in qts.items())),
                tuple(sorted((k, id(v)) for k, v in huff.items())),
+               tuple((c["id"], td, ta) for c, td, ta in scan),
                restart, len(segments))
         groups.setdefault(key, []).append(i)
     out: list = [None] * len(blobs)
@@ -1072,7 +1073,11 @@ def _decode_scan_batch(frame, scan, qts, huff, ecs_list, segments2d,
                 if rst.any():
                     ar = ai[rst]
                     seg_i = mcu_n[rst] // restart
-                    pos[ar] = base[ar] + segments2d[ar, seg_i] * 8
+                    # past its last RST marker a stream reads on from the
+                    # cursor, as _decode_scan does
+                    seen = seg_i < segments2d.shape[1]
+                    pos[ar[seen]] = (base[ar[seen]]
+                                     + segments2d[ar[seen], seg_i[seen]] * 8)
                     preds[ar] = 0
     if bad.any():
         # surface the precise per-stream error via the scalar path

@@ -8,6 +8,15 @@ codec library (spark_shp.riff): PCM / IEEE-float WAV at any bit depth and
 channel count, and AVI with uncompressed BI_RGB 'DIB ' frames. Compressed
 codecs (MP3/AAC/H.264/MJPEG) raise loudly — no codec library exists in
 this container; swap the decode fns for librosa/pyav on a real cluster.
+
+Every image kernel below except ``header_audit`` runs on ONE batch loop,
+``clip.shape_grouped``: per Arrow batch, rows group by (w, h, fmt), each
+group decodes once into a (k, h, w, 3) uint8 stack, and the kernel
+``kernel(px, grp, w, h, fmt)`` returns its output rows with the image's
+position in the group (0..k-1) in the ``image_id`` slot; the loop swaps
+in the image_id and emits the batch in input order. A kernel doing float
+math starts from ``px.astype(np.float64)``; integer kernels cast the
+uint8 stack straight to int64.
 """
 
 from __future__ import annotations
@@ -19,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
 from . import codecs, riff
+from .clip import shape_grouped
 
 FEATURE_SCHEMA = T.StructType([
     T.StructField("image_id", T.StringType()),
@@ -27,21 +37,6 @@ FEATURE_SCHEMA = T.StructType([
     T.StructField("edge_energy", T.DoubleType()),
     T.StructField("thumb64", T.ArrayType(T.DoubleType())),
 ])
-
-
-def _decode_stack(pdf: pd.DataFrame, idx: np.ndarray, w: int,
-                  h: int, fmt: str) -> np.ndarray:
-    """Decode a same-(w,h,fmt) group into ONE (n,h,w,3) float64 stack.
-    Raw images decode as a single frombuffer over the concatenated payloads;
-    compressed formats decode per image (zlib is inherently per-stream) but
-    all downstream math runs on the stack."""
-    blobs = pdf["bytes"].to_numpy()
-    if fmt == "raw":
-        flat = np.frombuffer(b"".join(bytes(blobs[i]) for i in idx),
-                             dtype=np.uint8)
-        return flat.reshape(len(idx), h, w, 3).astype(np.float64)
-    return np.stack([codecs.decode(bytes(blobs[i]), w, h, fmt)
-                     for i in idx]).astype(np.float64)
 
 
 def image_features(images: DataFrame) -> DataFrame:
@@ -54,35 +49,22 @@ def image_features(images: DataFrame) -> DataFrame:
     orchestration. Mixed-size batches degrade gracefully to one group per
     shape (the ragged fallback is the grouping itself)."""
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            n = len(pdf)
-            ids = pdf["image_id"].to_numpy()
-            out_rows = [None] * n
-            groups = pdf.groupby(["w", "h", "fmt"]).indices
-            for (w, h, fmt), idx in groups.items():
-                w, h = int(w), int(h)
-                px = _decode_stack(pdf, idx, w, h, fmt)     # (n,h,w,3)
-                gray = px.mean(axis=3)                      # (n,h,w)
-                mean_rgb = px.mean(axis=(1, 2))             # (n,3)
-                std_gray = gray.std(axis=(1, 2))
-                gy, gx = np.gradient(gray, axis=(1, 2))
-                edge = np.sqrt(gx ** 2 + gy ** 2).mean(axis=(1, 2))
-                hh, ww = (h // 8) * 8, (w // 8) * 8
-                thumb = (gray[:, :hh, :ww]
-                         .reshape(len(idx), 8, hh // 8, 8, ww // 8)
-                         .mean(axis=(2, 4)).reshape(len(idx), 64) / 255.0)
-                for k, i in enumerate(idx):
-                    out_rows[i] = (ids[i], mean_rgb[k].tolist(),
-                                   float(std_gray[k]), float(edge[k]),
-                                   thumb[k].tolist())
-            yield pd.DataFrame(out_rows,
-                               columns=[f.name for f in FEATURE_SCHEMA])
+    def kernel(px, grp, w, h, fmt):
+        px = px.astype(np.float64)                  # (n,h,w,3)
+        gray = px.mean(axis=3)                      # (n,h,w)
+        mean_rgb = px.mean(axis=(1, 2))             # (n,3)
+        std_gray = gray.std(axis=(1, 2))
+        gy, gx = np.gradient(gray, axis=(1, 2))
+        edge = np.sqrt(gx ** 2 + gy ** 2).mean(axis=(1, 2))
+        hh, ww = (h // 8) * 8, (w // 8) * 8
+        thumb = (gray[:, :hh, :ww]
+                 .reshape(len(px), 8, hh // 8, 8, ww // 8)
+                 .mean(axis=(2, 4)).reshape(len(px), 64) / 255.0)
+        return [(k, mean_rgb[k].tolist(), float(std_gray[k]),
+                 float(edge[k]), thumb[k].tolist())
+                for k in range(len(px))]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, FEATURE_SCHEMA))
+    return shape_grouped(images, FEATURE_SCHEMA, kernel)
 
 
 def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
@@ -95,26 +77,14 @@ def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
         T.StructField("fmt", T.StringType()),
     ])
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            rows = [None] * len(pdf)
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                px = _decode_stack(pdf, idx, w, h, fmt)     # (n,h,w,3)
-                yi = (np.arange(out_h) * h // out_h).astype(int)
-                xi = (np.arange(out_w) * w // out_w).astype(int)
-                small = px[:, yi][:, :, xi].astype(np.uint8)  # (n,oh,ow,3)
-                for k, i in enumerate(idx):
-                    rows[i] = (ids[i], codecs.encode(small[k], "raw"),
-                               out_w, out_h, "raw")
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):                   # px: (n,h,w,3)
+        yi = (np.arange(out_h) * h // out_h).astype(int)
+        xi = (np.arange(out_w) * w // out_w).astype(int)
+        small = px[:, yi][:, :, xi].astype(np.uint8)  # (n,oh,ow,3)
+        return [(k, codecs.encode(small[k], "raw"), out_w, out_h, "raw")
+                for k in range(len(px))]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 def canny_stats(images: DataFrame, t_lo2: int,
@@ -139,74 +109,65 @@ def canny_stats(images: DataFrame, t_lo2: int,
         T.StructField("edge_checksum", T.LongType()),
     ])
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            rows = [None] * len(pdf)
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                p = _decode_stack(pdf, idx, w, h, fmt)[..., 1] \
-                    .astype(np.int64)
-                gx = ((p[:, :-2, 2:] + 2 * p[:, 1:-1, 2:] + p[:, 2:, 2:])
-                      - (p[:, :-2, :-2] + 2 * p[:, 1:-1, :-2]
-                         + p[:, 2:, :-2]))
-                gy = ((p[:, 2:, :-2] + 2 * p[:, 2:, 1:-1] + p[:, 2:, 2:])
-                      - (p[:, :-2, :-2] + 2 * p[:, :-2, 1:-1]
-                         + p[:, :-2, 2:]))
-                g2 = gx * gx + gy * gy                  # (n, h-2, w-2)
-                ax, ay = np.abs(gx), np.abs(gy)
-                sector = np.where(
-                    5 * ay <= 2 * ax, 0,
-                    np.where(5 * ax <= 2 * ay, 2,
-                             np.where(gx * gy > 0, 1, 3)))
-                # neighbor values along the gradient per sector, with a
-                # -1 border so edge-of-interior pixels compare true
-                pad = np.full((g2.shape[0], g2.shape[1] + 2,
-                               g2.shape[2] + 2), -1, dtype=np.int64)
-                pad[:, 1:-1, 1:-1] = g2
-                offs = {0: (0, 1), 1: (1, 1), 2: (1, 0), 3: (-1, 1)}
-                fwd = np.empty_like(g2)
-                bwd = np.empty_like(g2)
-                for s, (dy, dx) in offs.items():
-                    m = sector == s
-                    fwd[m] = pad[:, 1 + dy:pad.shape[1] - 1 + dy,
-                                 1 + dx:pad.shape[2] - 1 + dx][m]
-                    bwd[m] = pad[:, 1 - dy:pad.shape[1] - 1 - dy,
-                                 1 - dx:pad.shape[2] - 1 - dx][m]
-                keep = (g2 > fwd) & (g2 >= bwd)
-                strong = keep & (g2 >= t_hi2)
-                weak = keep & (g2 >= t_lo2) & (g2 < t_hi2)
-                # hysteresis: dilate the reached set into weak pixels
-                reach = strong.copy()
-                cand = strong | weak
-                while True:
-                    # 8-neighborhood dilation = row dilation then column
-                    grown = reach.copy()
-                    grown[:, 1:, :] |= reach[:, :-1, :]
-                    grown[:, :-1, :] |= reach[:, 1:, :]
-                    g3 = grown.copy()
-                    g3[:, :, 1:] |= grown[:, :, :-1]
-                    g3[:, :, :-1] |= grown[:, :, 1:]
-                    nxt = reach | (g3 & cand)
-                    if (nxt == reach).all():
-                        break
-                    reach = nxt
-                yy, xx = np.meshgrid(
-                    np.arange(1, h - 1, dtype=np.int64),
-                    np.arange(1, w - 1, dtype=np.int64), indexing="ij")
-                pos = yy * 4096 + xx
-                for k, i in enumerate(idx):
-                    img_i = int(str(ids[i])[3:])
-                    rows[i] = (ids[i], int(strong[k].sum()),
-                               int(weak[k].sum()), int(reach[k].sum()),
-                               int(((img_i + 1) * pos[reach[k]]).sum()))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        p = px[..., 1].astype(np.int64)
+        gx = ((p[:, :-2, 2:] + 2 * p[:, 1:-1, 2:] + p[:, 2:, 2:])
+              - (p[:, :-2, :-2] + 2 * p[:, 1:-1, :-2]
+                 + p[:, 2:, :-2]))
+        gy = ((p[:, 2:, :-2] + 2 * p[:, 2:, 1:-1] + p[:, 2:, 2:])
+              - (p[:, :-2, :-2] + 2 * p[:, :-2, 1:-1]
+                 + p[:, :-2, 2:]))
+        g2 = gx * gx + gy * gy                  # (n, h-2, w-2)
+        ax, ay = np.abs(gx), np.abs(gy)
+        sector = np.where(
+            5 * ay <= 2 * ax, 0,
+            np.where(5 * ax <= 2 * ay, 2,
+                     np.where(gx * gy > 0, 1, 3)))
+        # neighbor values along the gradient per sector, with a
+        # -1 border so edge-of-interior pixels compare true
+        pad = np.full((g2.shape[0], g2.shape[1] + 2,
+                       g2.shape[2] + 2), -1, dtype=np.int64)
+        pad[:, 1:-1, 1:-1] = g2
+        offs = {0: (0, 1), 1: (1, 1), 2: (1, 0), 3: (-1, 1)}
+        fwd = np.empty_like(g2)
+        bwd = np.empty_like(g2)
+        for s, (dy, dx) in offs.items():
+            m = sector == s
+            fwd[m] = pad[:, 1 + dy:pad.shape[1] - 1 + dy,
+                         1 + dx:pad.shape[2] - 1 + dx][m]
+            bwd[m] = pad[:, 1 - dy:pad.shape[1] - 1 - dy,
+                         1 - dx:pad.shape[2] - 1 - dx][m]
+        keep = (g2 > fwd) & (g2 >= bwd)
+        strong = keep & (g2 >= t_hi2)
+        weak = keep & (g2 >= t_lo2) & (g2 < t_hi2)
+        # hysteresis: dilate the reached set into weak pixels
+        reach = strong.copy()
+        cand = strong | weak
+        while True:
+            # 8-neighborhood dilation = row dilation then column
+            grown = reach.copy()
+            grown[:, 1:, :] |= reach[:, :-1, :]
+            grown[:, :-1, :] |= reach[:, 1:, :]
+            g3 = grown.copy()
+            g3[:, :, 1:] |= grown[:, :, :-1]
+            g3[:, :, :-1] |= grown[:, :, 1:]
+            nxt = reach | (g3 & cand)
+            if (nxt == reach).all():
+                break
+            reach = nxt
+        yy, xx = np.meshgrid(
+            np.arange(1, h - 1, dtype=np.int64),
+            np.arange(1, w - 1, dtype=np.int64), indexing="ij")
+        pos = yy * 4096 + xx
+        rows = []
+        for k, iid in enumerate(grp["image_id"]):
+            img_i = int(str(iid)[3:])
+            rows.append((k, int(strong[k].sum()),
+                         int(weak[k].sum()), int(reach[k].sum()),
+                         int(((img_i + 1) * pos[reach[k]]).sum())))
+        return rows
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 # --- audio/video: real RIFF decode (WAV / uncompressed AVI), loud otherwise ---
@@ -334,34 +295,23 @@ def augment_checksums(images: DataFrame, res_w: int = 16,
         T.StructField("cs_resize", T.LongType()),
     ])
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            rows = [None] * len(pdf)
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                px = _decode_stack(pdf, idx, w, h, fmt).astype(np.int64)
-                flip = px[:, :, ::-1, :]
-                h2, w2 = h // 2, w // 2
-                y0, x0 = h // 4, w // 4
-                crop = px[:, y0:y0 + h2, x0:x0 + w2, :]
-                rot = np.rot90(px, k=1, axes=(1, 2))   # (n, w, h, 3)
-                yi = (np.arange(res_h) * h // res_h).astype(int)
-                xi = (np.arange(res_w) * w // res_w).astype(int)
-                res = px[:, yi][:, :, xi]
-                cs = [np.einsum("nhwc,hwc->n", a, _aug_weights(
-                          a.shape[1], a.shape[2]))
-                      for a in (flip, crop, rot, res)]
-                for k, i in enumerate(idx):
-                    rows[i] = (ids[i], int(cs[0][k]), int(cs[1][k]),
-                               int(cs[2][k]), int(cs[3][k]))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        px = px.astype(np.int64)
+        flip = px[:, :, ::-1, :]
+        h2, w2 = h // 2, w // 2
+        y0, x0 = h // 4, w // 4
+        crop = px[:, y0:y0 + h2, x0:x0 + w2, :]
+        rot = np.rot90(px, k=1, axes=(1, 2))   # (n, w, h, 3)
+        yi = (np.arange(res_h) * h // res_h).astype(int)
+        xi = (np.arange(res_w) * w // res_w).astype(int)
+        res = px[:, yi][:, :, xi]
+        cs = [np.einsum("nhwc,hwc->n", a, _aug_weights(
+                  a.shape[1], a.shape[2]))
+              for a in (flip, crop, rot, res)]
+        return [(k, int(cs[0][k]), int(cs[1][k]), int(cs[2][k]),
+                 int(cs[3][k])) for k in range(len(px))]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 def mosaic_checksums(images: DataFrame, res: int = 16,
@@ -390,29 +340,16 @@ def mosaic_checksums(images: DataFrame, res: int = 16,
         slot_w.append(1 + ((ox + x) * 31 + (oy + y) * 17 + c * 7) % 101)
     slot_w = np.stack(slot_w)
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            tiles = pdf["tile"].to_numpy()
-            ids = pdf["image_id"].to_numpy()
-            slots = pdf["slot"].to_numpy().astype(int)
-            rows = [None] * len(pdf)
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                px = _decode_stack(pdf, idx, w, h, fmt).astype(np.int64)
-                yi = (np.arange(res) * h // res).astype(int)
-                xi = (np.arange(res) * w // res).astype(int)
-                resized = px[:, yi][:, :, xi]
-                cs = np.einsum("nhwc,nhwc->n", resized, slot_w[slots[idx]])
-                for k, i in enumerate(idx):
-                    rows[i] = (int(tiles[i]), ids[i], int(cs[k]))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        px = px.astype(np.int64)
+        yi = (np.arange(res) * h // res).astype(int)
+        xi = (np.arange(res) * w // res).astype(int)
+        resized = px[:, yi][:, :, xi]
+        cs = np.einsum("nhwc,nhwc->n", resized,
+                       slot_w[grp["slot"].astype(int)])
+        return [(int(t), k, int(cs[k])) for k, t in enumerate(grp["tile"])]
 
-    return (images.select("tile", "slot", "image_id", "bytes", "w", "h",
-                          "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel, ("tile", "slot"))
 
 
 def histogram_checksums(images: DataFrame, buckets: int = 8) -> DataFrame:
@@ -428,29 +365,18 @@ def histogram_checksums(images: DataFrame, buckets: int = 8) -> DataFrame:
     ])
     width = 256 // buckets
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            out = []
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                px = _decode_stack(pdf, idx, w, h, fmt).astype(np.int64)
-                b = px // width                       # (n, h, w, 3)
-                flat = (b + np.arange(len(idx))[:, None, None, None]
-                        * buckets)
-                counts = np.bincount(flat.ravel(),
-                                     minlength=len(idx) * buckets)
-                counts = counts.reshape(len(idx), buckets)
-                for k, i in enumerate(idx):
-                    for bb in range(buckets):
-                        out.append((ids[i], bb, int(counts[k, bb])))
-            yield pd.DataFrame(out, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        px = px.astype(np.int64)
+        b = px // width                       # (n, h, w, 3)
+        flat = (b + np.arange(len(px))[:, None, None, None]
+                * buckets)
+        counts = np.bincount(flat.ravel(),
+                             minlength=len(px) * buckets)
+        counts = counts.reshape(len(px), buckets)
+        return [(k, bb, int(counts[k, bb]))
+                for k in range(len(px)) for bb in range(buckets)]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 def sobel_checksums(images: DataFrame) -> DataFrame:
@@ -464,30 +390,18 @@ def sobel_checksums(images: DataFrame) -> DataFrame:
         T.StructField("energy", T.LongType()),
     ])
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            rows = [None] * len(pdf)
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                p = _decode_stack(pdf, idx, w, h, fmt)[..., 1] \
-                    .astype(np.int64)                       # (n, h, w)
-                gx = ((p[:, :-2, 2:] + 2 * p[:, 1:-1, 2:] + p[:, 2:, 2:])
-                      - (p[:, :-2, :-2] + 2 * p[:, 1:-1, :-2]
-                         + p[:, 2:, :-2]))
-                gy = ((p[:, 2:, :-2] + 2 * p[:, 2:, 1:-1] + p[:, 2:, 2:])
-                      - (p[:, :-2, :-2] + 2 * p[:, :-2, 1:-1]
-                         + p[:, :-2, 2:]))
-                e = (np.abs(gx) + np.abs(gy)).sum(axis=(1, 2))
-                for k, i in enumerate(idx):
-                    rows[i] = (ids[i], int(e[k]))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        p = px[..., 1].astype(np.int64)                       # (n, h, w)
+        gx = ((p[:, :-2, 2:] + 2 * p[:, 1:-1, 2:] + p[:, 2:, 2:])
+              - (p[:, :-2, :-2] + 2 * p[:, 1:-1, :-2]
+                 + p[:, 2:, :-2]))
+        gy = ((p[:, 2:, :-2] + 2 * p[:, 2:, 1:-1] + p[:, 2:, 2:])
+              - (p[:, :-2, :-2] + 2 * p[:, :-2, 1:-1]
+                 + p[:, :-2, 2:]))
+        e = (np.abs(gx) + np.abs(gy)).sum(axis=(1, 2))
+        return [(k, int(e[k])) for k in range(len(px))]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 def rle_run_counts(images: DataFrame) -> DataFrame:
@@ -503,24 +417,12 @@ def rle_run_counts(images: DataFrame) -> DataFrame:
         T.StructField("n_px", T.LongType()),
     ])
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            rows = [None] * len(pdf)
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                g = _decode_stack(pdf, idx, w, h, fmt)[..., 1] \
-                    .reshape(len(idx), h * w)               # (n, h*w)
-                runs = 1 + (g[:, 1:] != g[:, :-1]).sum(axis=1)
-                for k, i in enumerate(idx):
-                    rows[i] = (ids[i], int(runs[k]), h * w)
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        g = px[..., 1].reshape(len(px), h * w)               # (n, h*w)
+        runs = 1 + (g[:, 1:] != g[:, :-1]).sum(axis=1)
+        return [(k, int(runs[k]), h * w) for k in range(len(px))]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 def blob_checksums(images: DataFrame, thresh: int = 128) -> DataFrame:
@@ -539,44 +441,36 @@ def blob_checksums(images: DataFrame, thresh: int = 128) -> DataFrame:
         T.StructField("label_sum", T.LongType()),
     ])
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
+    def kernel(px, grp, w, h, fmt):
+        g = px[..., 1].astype(np.float64)
+        mask = g >= thresh                          # (n, h, w)
+        big = np.int64(h * w)
+        yy, xx = np.meshgrid(np.arange(h, dtype=np.int64),
+                             np.arange(w, dtype=np.int64),
+                             indexing="ij")
+        lab = np.where(mask, (yy * w + xx)[None], big).copy()
+        while True:
+            nxt = lab.copy()
+            nxt[:, 1:, :] = np.minimum(nxt[:, 1:, :], lab[:, :-1, :])
+            nxt[:, :-1, :] = np.minimum(nxt[:, :-1, :], lab[:, 1:, :])
+            nxt[:, :, 1:] = np.minimum(nxt[:, :, 1:], lab[:, :, :-1])
+            nxt[:, :, :-1] = np.minimum(nxt[:, :, :-1], lab[:, :, 1:])
+            nxt = np.where(mask, nxt, big)
+            if np.array_equal(nxt, lab):
+                break
+            lab = nxt
+        rows = []
+        for k in range(len(px)):
+            lv = lab[k][mask[k]]
+            if lv.size == 0:
+                rows.append((k, 0, 0, 0))
                 continue
-            ids = pdf["image_id"].to_numpy()
-            rows = [None] * len(pdf)
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                g = _decode_stack(pdf, idx, w, h, fmt)[..., 1]
-                mask = g >= thresh                          # (n, h, w)
-                big = np.int64(h * w)
-                yy, xx = np.meshgrid(np.arange(h, dtype=np.int64),
-                                     np.arange(w, dtype=np.int64),
-                                     indexing="ij")
-                lab = np.where(mask, (yy * w + xx)[None], big).copy()
-                while True:
-                    nxt = lab.copy()
-                    nxt[:, 1:, :] = np.minimum(nxt[:, 1:, :], lab[:, :-1, :])
-                    nxt[:, :-1, :] = np.minimum(nxt[:, :-1, :], lab[:, 1:, :])
-                    nxt[:, :, 1:] = np.minimum(nxt[:, :, 1:], lab[:, :, :-1])
-                    nxt[:, :, :-1] = np.minimum(nxt[:, :, :-1], lab[:, :, 1:])
-                    nxt = np.where(mask, nxt, big)
-                    if np.array_equal(nxt, lab):
-                        break
-                    lab = nxt
-                for k, i in enumerate(idx):
-                    lv = lab[k][mask[k]]
-                    if lv.size == 0:
-                        rows[i] = (ids[i], 0, 0, 0)
-                        continue
-                    uniq, counts = np.unique(lv, return_counts=True)
-                    rows[i] = (ids[i], int(uniq.size),
-                               int(counts.max()), int(uniq.sum()))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
+            uniq, counts = np.unique(lv, return_counts=True)
+            rows.append((k, int(uniq.size),
+                         int(counts.max()), int(uniq.sum())))
+        return rows
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 def orientation_checksums(images: DataFrame) -> DataFrame:
@@ -591,45 +485,32 @@ def orientation_checksums(images: DataFrame) -> DataFrame:
         T.StructField("n_px", T.LongType()),
     ])
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            out = []
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                p = _decode_stack(pdf, idx, w, h, fmt)[..., 1] \
-                    .astype(np.int64)
-                gx = ((p[:, :-2, 2:] + 2 * p[:, 1:-1, 2:] + p[:, 2:, 2:])
-                      - (p[:, :-2, :-2] + 2 * p[:, 1:-1, :-2]
-                         + p[:, 2:, :-2]))
-                gy = ((p[:, 2:, :-2] + 2 * p[:, 2:, 1:-1] + p[:, 2:, 2:])
-                      - (p[:, :-2, :-2] + 2 * p[:, :-2, 1:-1]
-                         + p[:, :-2, 2:]))
-                ax, ay = np.abs(gx), np.abs(gy)
-                steep = ay > ax
-                oct_ = np.where(
-                    (gx >= 0) & (gy >= 0), np.where(steep, 1, 0),
-                    np.where((gx < 0) & (gy >= 0), np.where(steep, 2, 3),
-                             np.where((gx < 0) & (gy < 0),
-                                      np.where(steep, 5, 4),
-                                      np.where(steep, 6, 7))))
-                live = (gx != 0) | (gy != 0)
-                flat = np.where(live, oct_, 8) + \
-                    np.arange(len(idx))[:, None, None] * 9
-                counts = np.bincount(flat.ravel(),
-                                     minlength=len(idx) * 9)
-                counts = counts.reshape(len(idx), 9)
-                for k, i in enumerate(idx):
-                    for o in range(8):
-                        if counts[k, o]:
-                            out.append((ids[i], o, int(counts[k, o])))
-            yield pd.DataFrame(out, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        p = px[..., 1].astype(np.int64)
+        gx = ((p[:, :-2, 2:] + 2 * p[:, 1:-1, 2:] + p[:, 2:, 2:])
+              - (p[:, :-2, :-2] + 2 * p[:, 1:-1, :-2]
+                 + p[:, 2:, :-2]))
+        gy = ((p[:, 2:, :-2] + 2 * p[:, 2:, 1:-1] + p[:, 2:, 2:])
+              - (p[:, :-2, :-2] + 2 * p[:, :-2, 1:-1]
+                 + p[:, :-2, 2:]))
+        ax, ay = np.abs(gx), np.abs(gy)
+        steep = ay > ax
+        oct_ = np.where(
+            (gx >= 0) & (gy >= 0), np.where(steep, 1, 0),
+            np.where((gx < 0) & (gy >= 0), np.where(steep, 2, 3),
+                     np.where((gx < 0) & (gy < 0),
+                              np.where(steep, 5, 4),
+                              np.where(steep, 6, 7))))
+        live = (gx != 0) | (gy != 0)
+        flat = np.where(live, oct_, 8) + \
+            np.arange(len(px))[:, None, None] * 9
+        counts = np.bincount(flat.ravel(),
+                             minlength=len(px) * 9)
+        counts = counts.reshape(len(px), 9)
+        return [(k, o, int(counts[k, o]))
+                for k in range(len(px)) for o in range(8) if counts[k, o]]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 # 4x4 signed template for template_match_peaks: K[u,v] =
@@ -656,35 +537,22 @@ def template_match_checksums(images: DataFrame) -> DataFrame:
     ])
     kern = template_kernel()
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            rows = [None] * len(pdf)
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                p = _decode_stack(pdf, idx, w, h, fmt)[..., 1] \
-                    .astype(np.int64)
-                oh, ow = h - 3, w - 3
-                score = np.zeros((len(idx), oh, ow), dtype=np.int64)
-                for u in range(4):
-                    for v in range(4):
-                        score += kern[u, v] * p[:, u:u + oh, v:v + ow]
-                pos = (np.arange(oh, dtype=np.int64)[:, None] * w
-                       + np.arange(ow, dtype=np.int64)[None, :])
-                top = np.int64((1 << 24) - 1)
-                key = (score << np.int64(24)) + (top - pos[None])
-                best = key.reshape(len(idx), -1).max(axis=1)
-                for k, i in enumerate(idx):
-                    b = int(best[k])
-                    rows[i] = (ids[i], b >> 24,
-                               int(top) - (b & int(top)))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        p = px[..., 1].astype(np.int64)
+        oh, ow = h - 3, w - 3
+        score = np.zeros((len(px), oh, ow), dtype=np.int64)
+        for u in range(4):
+            for v in range(4):
+                score += kern[u, v] * p[:, u:u + oh, v:v + ow]
+        pos = (np.arange(oh, dtype=np.int64)[:, None] * w
+               + np.arange(ow, dtype=np.int64)[None, :])
+        top = np.int64((1 << 24) - 1)
+        key = (score << np.int64(24)) + (top - pos[None])
+        best = key.reshape(len(px), -1).max(axis=1)
+        return [(k, int(b) >> 24, int(top) - (int(b) & int(top)))
+                for k, b in enumerate(best)]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 def glcm_checksums(images: DataFrame, levels: int = 8) -> DataFrame:
@@ -704,35 +572,23 @@ def glcm_checksums(images: DataFrame, levels: int = 8) -> DataFrame:
     ])
     shift = 256 // levels
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            out = []
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                q = (_decode_stack(pdf, idx, w, h, fmt)
-                     .astype(np.int64) // shift)        # (n, h, w, 3)
-                left, right = q[:, :, :-1, :], q[:, :, 1:, :]
-                contrast = ((left - right) ** 2) \
-                    .reshape(len(idx), -1).sum(axis=1)
-                code = (left * levels + right
-                        + np.arange(len(idx), dtype=np.int64)
-                        [:, None, None, None] * levels * levels)
-                counts = np.bincount(
-                    code.ravel(), minlength=len(idx) * levels * levels)
-                energy = (counts.reshape(len(idx), -1).astype(np.int64)
-                          ** 2).sum(axis=1)
-                n_pairs = h * (w - 1) * 3
-                for k, i in enumerate(idx):
-                    out.append((ids[i], n_pairs, int(contrast[k]),
-                                int(energy[k])))
-            yield pd.DataFrame(out, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        q = px.astype(np.int64) // shift           # (n, h, w, 3)
+        left, right = q[:, :, :-1, :], q[:, :, 1:, :]
+        contrast = ((left - right) ** 2) \
+            .reshape(len(px), -1).sum(axis=1)
+        code = (left * levels + right
+                + np.arange(len(px), dtype=np.int64)
+                [:, None, None, None] * levels * levels)
+        counts = np.bincount(
+            code.ravel(), minlength=len(px) * levels * levels)
+        energy = (counts.reshape(len(px), -1).astype(np.int64)
+                  ** 2).sum(axis=1)
+        n_pairs = h * (w - 1) * 3
+        return [(k, n_pairs, int(contrast[k]), int(energy[k]))
+                for k in range(len(px))]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 def distortion_checksums(images: DataFrame) -> DataFrame:
@@ -755,34 +611,23 @@ def distortion_checksums(images: DataFrame) -> DataFrame:
     ])
     _ = image_pixels  # single-image twin of the stacked hash below
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            out = []
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                dec = _decode_stack(pdf, idx, w, h, fmt).astype(np.int64)
-                nums = np.array([int(ids[i][3:]) for i in idx],
-                                dtype=np.int64)
-                y, x, c = np.meshgrid(np.arange(h, dtype=np.int64),
-                                      np.arange(w, dtype=np.int64),
-                                      np.arange(3, dtype=np.int64),
-                                      indexing="ij")
-                k = (nums[:, None, None, None] * 1_000_003
-                     + y * 4096 + x * 4 + c)
-                err = dec - (mix(k) % 256).astype(np.int64)
-                sse = (err ** 2).reshape(len(idx), -1).sum(axis=1)
-                mx = np.abs(err).reshape(len(idx), -1).max(axis=1)
-                for j, i in enumerate(idx):
-                    out.append((ids[i], h * w * 3, int(sse[j]),
-                                int(mx[j])))
-            yield pd.DataFrame(out, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        dec = px.astype(np.int64)
+        nums = np.array([int(s[3:]) for s in grp["image_id"]],
+                        dtype=np.int64)
+        y, x, c = np.meshgrid(np.arange(h, dtype=np.int64),
+                              np.arange(w, dtype=np.int64),
+                              np.arange(3, dtype=np.int64),
+                              indexing="ij")
+        k = (nums[:, None, None, None] * 1_000_003
+             + y * 4096 + x * 4 + c)
+        err = dec - (mix(k) % 256).astype(np.int64)
+        sse = (err ** 2).reshape(len(px), -1).sum(axis=1)
+        mx = np.abs(err).reshape(len(px), -1).max(axis=1)
+        return [(j, h * w * 3, int(sse[j]), int(mx[j]))
+                for j in range(len(px))]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 def equalize_checksums(images: DataFrame) -> DataFrame:
@@ -802,37 +647,26 @@ def equalize_checksums(images: DataFrame) -> DataFrame:
         T.StructField("checksum", T.LongType()),
     ])
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            out = []
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                px = _decode_stack(pdf, idx, w, h, fmt).astype(np.int64)
-                n, npx = len(idx), h * w * 3
-                flat = px + np.arange(n, dtype=np.int64)[
-                    :, None, None, None] * 256
-                counts = np.bincount(flat.ravel(), minlength=n * 256) \
-                    .reshape(n, 256)
-                cdf = counts.cumsum(axis=1)
-                # cdf_min = cdf at each image's smallest present value
-                cdf_min = np.where(counts.cumsum(axis=1) > 0, cdf,
-                                   np.int64(1) << 60).min(axis=1)
-                den = np.maximum(npx - cdf_min, 1)
-                emap = (cdf - cdf_min[:, None]) * 255 // den[:, None]
-                eq = np.take_along_axis(
-                    emap, px.reshape(n, -1), axis=1)     # (n, npx)
-                pos = np.arange(npx, dtype=np.int64) + 1
-                for k, i in enumerate(idx):
-                    out.append((ids[i], npx, int(eq[k].sum()),
-                                int((eq[k] * pos).sum())))
-            yield pd.DataFrame(out, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        px = px.astype(np.int64)
+        n, npx = len(px), h * w * 3
+        flat = px + np.arange(n, dtype=np.int64)[
+            :, None, None, None] * 256
+        counts = np.bincount(flat.ravel(), minlength=n * 256) \
+            .reshape(n, 256)
+        cdf = counts.cumsum(axis=1)
+        # cdf_min = cdf at each image's smallest present value
+        cdf_min = np.where(counts.cumsum(axis=1) > 0, cdf,
+                           np.int64(1) << 60).min(axis=1)
+        den = np.maximum(npx - cdf_min, 1)
+        emap = (cdf - cdf_min[:, None]) * 255 // den[:, None]
+        eq = np.take_along_axis(
+            emap, px.reshape(n, -1), axis=1)     # (n, npx)
+        pos = np.arange(npx, dtype=np.int64) + 1
+        return [(k, npx, int(eq[k].sum()), int((eq[k] * pos).sum()))
+                for k in range(n)]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 def quadtree_checksums(images: DataFrame, depth: int = 3) -> DataFrame:
@@ -851,32 +685,24 @@ def quadtree_checksums(images: DataFrame, depth: int = 3) -> DataFrame:
         T.StructField("checksum", T.LongType()),
     ])
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            out = []
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                px = _decode_stack(pdf, idx, w, h, fmt).astype(np.int64)
-                n = len(idx)
-                for d in range(depth + 1):
-                    nb = 1 << d
-                    b = px.reshape(n, nb, h // nb, nb, w // nb, 3)
-                    rng = (b.max(axis=(2, 4, 5))
-                           - b.min(axis=(2, 4, 5)))     # (n, nb, nb)
-                    wgt = (np.arange(nb, dtype=np.int64)[:, None] * nb
-                           + np.arange(nb, dtype=np.int64)[None, :] + 1)
-                    for k, i in enumerate(idx):
-                        out.append((ids[i], d, nb * nb,
-                                    int(rng[k].sum()),
-                                    int((rng[k] * wgt).sum())))
-            yield pd.DataFrame(out, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        px = px.astype(np.int64)
+        n = len(px)
+        rows = []
+        for d in range(depth + 1):
+            nb = 1 << d
+            b = px.reshape(n, nb, h // nb, nb, w // nb, 3)
+            rng = (b.max(axis=(2, 4, 5))
+                   - b.min(axis=(2, 4, 5)))     # (n, nb, nb)
+            wgt = (np.arange(nb, dtype=np.int64)[:, None] * nb
+                   + np.arange(nb, dtype=np.int64)[None, :] + 1)
+            for k in range(n):
+                rows.append((k, d, nb * nb,
+                             int(rng[k].sum()),
+                             int((rng[k] * wgt).sum())))
+        return rows
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 BAYER4 = np.array([[0, 8, 2, 10], [12, 4, 14, 6],
@@ -896,29 +722,18 @@ def dither_checksums(images: DataFrame) -> DataFrame:
         T.StructField("checksum", T.LongType()),
     ])
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            out = []
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                px = _decode_stack(pdf, idx, w, h, fmt).astype(np.int64)
-                ty = BAYER4[np.arange(h) % 4][:, np.arange(w) % 4]
-                thr = (ty * 16 + 8)[None, :, :, None]    # (1, h, w, 1)
-                on = px > thr                            # (n, h, w, 3)
-                npx = h * w * 3
-                pos = (np.arange(npx, dtype=np.int64) + 1).reshape(
-                    1, h, w, 3)
-                for k, i in enumerate(idx):
-                    out.append((ids[i], npx, int(on[k].sum()),
-                                int((on[k] * pos[0]).sum())))
-            yield pd.DataFrame(out, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        px = px.astype(np.int64)
+        ty = BAYER4[np.arange(h) % 4][:, np.arange(w) % 4]
+        thr = (ty * 16 + 8)[None, :, :, None]    # (1, h, w, 1)
+        on = px > thr                            # (n, h, w, 3)
+        npx = h * w * 3
+        pos = (np.arange(npx, dtype=np.int64) + 1).reshape(
+            1, h, w, 3)
+        return [(k, npx, int(on[k].sum()), int((on[k] * pos[0]).sum()))
+                for k in range(len(px))]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 def harris_checksums(images: DataFrame) -> DataFrame:
@@ -938,42 +753,30 @@ def harris_checksums(images: DataFrame) -> DataFrame:
     ])
     mod = 1 << 31
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            rows = [None] * len(pdf)
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                p = _decode_stack(pdf, idx, w, h, fmt)[..., 1] \
-                    .astype(np.int64)
-                gx = ((p[:, :-2, 2:] + 2 * p[:, 1:-1, 2:] + p[:, 2:, 2:])
-                      - (p[:, :-2, :-2] + 2 * p[:, 1:-1, :-2]
-                         + p[:, 2:, :-2]))
-                gy = ((p[:, 2:, :-2] + 2 * p[:, 2:, 1:-1] + p[:, 2:, 2:])
-                      - (p[:, :-2, :-2] + 2 * p[:, :-2, 1:-1]
-                         + p[:, :-2, 2:]))
+    def kernel(px, grp, w, h, fmt):
+        p = px[..., 1].astype(np.int64)
+        gx = ((p[:, :-2, 2:] + 2 * p[:, 1:-1, 2:] + p[:, 2:, 2:])
+              - (p[:, :-2, :-2] + 2 * p[:, 1:-1, :-2]
+                 + p[:, 2:, :-2]))
+        gy = ((p[:, 2:, :-2] + 2 * p[:, 2:, 1:-1] + p[:, 2:, 2:])
+              - (p[:, :-2, :-2] + 2 * p[:, :-2, 1:-1]
+                 + p[:, :-2, 2:]))
 
-                def box3(a):
-                    return (a[:, :-2, :-2] + a[:, :-2, 1:-1] + a[:, :-2, 2:]
-                            + a[:, 1:-1, :-2] + a[:, 1:-1, 1:-1]
-                            + a[:, 1:-1, 2:]
-                            + a[:, 2:, :-2] + a[:, 2:, 1:-1] + a[:, 2:, 2:])
-                aa, bb, cc = box3(gx * gx), box3(gy * gy), box3(gx * gy)
-                # A*B ~ 8e13 fits int64; 20*A*B ~ 1.6e15 fits; the SUM
-                # may not -> python ints, reported mod 2^31
-                r20 = 20 * (aa * bb - cc * cc) - (aa + bb) ** 2
-                corners = r20 > 0
-                for k, i in enumerate(idx):
-                    mass = int(r20[k][corners[k]].sum()) % mod
-                    rows[i] = (ids[i], int(r20[k].size),
-                               int(corners[k].sum()), mass)
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
+        def box3(a):
+            return (a[:, :-2, :-2] + a[:, :-2, 1:-1] + a[:, :-2, 2:]
+                    + a[:, 1:-1, :-2] + a[:, 1:-1, 1:-1]
+                    + a[:, 1:-1, 2:]
+                    + a[:, 2:, :-2] + a[:, 2:, 1:-1] + a[:, 2:, 2:])
+        aa, bb, cc = box3(gx * gx), box3(gy * gy), box3(gx * gy)
+        # A*B ~ 8e13 fits int64; 20*A*B ~ 1.6e15 fits; the SUM
+        # may not -> python ints, reported mod 2^31
+        r20 = 20 * (aa * bb - cc * cc) - (aa + bb) ** 2
+        corners = r20 > 0
+        return [(k, int(r20[k].size), int(corners[k].sum()),
+                 int(r20[k][corners[k]].sum()) % mod)
+                for k in range(len(px))]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 def header_audit(images: DataFrame) -> DataFrame:
@@ -1062,27 +865,16 @@ def opponent_moment_checksums(images: DataFrame) -> DataFrame:
         T.StructField("s_yb2", T.LongType()),
     ])
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            out = []
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                px = _decode_stack(pdf, idx, w, h, fmt).astype(np.int64)
-                rg = px[..., 0] - px[..., 1]
-                yb = px[..., 0] + px[..., 1] - 2 * px[..., 2]
-                n = len(idx)
-                out += [(ids[i], h * w,
-                         int(rg[k].sum()), int((rg[k] ** 2).sum()),
-                         int(yb[k].sum()), int((yb[k] ** 2).sum()))
-                        for k, i in enumerate(idx)]
-            yield pd.DataFrame(out, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        px = px.astype(np.int64)
+        rg = px[..., 0] - px[..., 1]
+        yb = px[..., 0] + px[..., 1] - 2 * px[..., 2]
+        return [(k, h * w,
+                 int(rg[k].sum()), int((rg[k] ** 2).sum()),
+                 int(yb[k].sum()), int((yb[k] ** 2).sum()))
+                for k in range(len(px))]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 def fingerprint_checksums(images: DataFrame) -> DataFrame:
@@ -1097,24 +889,14 @@ def fingerprint_checksums(images: DataFrame) -> DataFrame:
     ])
     mod = (1 << 61) - 1
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            rows = [None] * len(pdf)
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                px = _decode_stack(pdf, idx, w, h, fmt).astype(np.int64)
-                pos = np.arange(h * w * 3, dtype=np.int64) + 1
-                flat = px.reshape(len(idx), -1)
-                for k, i in enumerate(idx):
-                    rows[i] = (ids[i], int((flat[k] * pos).sum()) % mod)
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        px = px.astype(np.int64)
+        pos = np.arange(h * w * 3, dtype=np.int64) + 1
+        flat = px.reshape(len(px), -1)
+        return [(k, int((flat[k] * pos).sum()) % mod)
+                for k in range(len(px))]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 def boxsum_checksums(images: DataFrame, r: int = 4,
@@ -1135,39 +917,29 @@ def boxsum_checksums(images: DataFrame, r: int = 4,
         T.StructField("checksum", T.LongType()),
     ])
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            rows = [None] * len(pdf)
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                px = _decode_stack(pdf, idx, w, h, fmt).astype(np.int64)
-                # zero-padded SAT: S[:, y+1, x+1] = sum px[:, :y+1, :x+1]
-                sat = np.zeros((len(idx), h + 1, w + 1, 3), dtype=np.int64)
-                np.cumsum(np.cumsum(px, axis=1), axis=2, out=sat[:, 1:, 1:])
-                ay = np.arange(r, h - r, stride)
-                ax = np.arange(r, w - r, stride)
-                yy, xx = np.meshgrid(ay, ax, indexing="ij")
-                yi = (yy + r + 1).ravel()
-                xi = (xx + r + 1).ravel()
-                y0 = (yy - r).ravel()
-                x0 = (xx - r).ravel()
-                box = (sat[:, yi, xi] - sat[:, y0, xi]
-                       - sat[:, yi, x0] + sat[:, y0, x0])  # (n, A, 3)
-                pos = ((yy.ravel() * w + xx.ravel()) * 3)[None, :, None] \
-                    + np.arange(3)[None, None, :] + 1
-                n_anchors = len(ay) * len(ax) * 3
-                mass = box.sum(axis=(1, 2))
-                chk = (box * pos).sum(axis=(1, 2))
-                for k, i in enumerate(idx):
-                    rows[i] = (ids[i], n_anchors, int(mass[k]), int(chk[k]))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        px = px.astype(np.int64)
+        # zero-padded SAT: S[:, y+1, x+1] = sum px[:, :y+1, :x+1]
+        sat = np.zeros((len(px), h + 1, w + 1, 3), dtype=np.int64)
+        np.cumsum(np.cumsum(px, axis=1), axis=2, out=sat[:, 1:, 1:])
+        ay = np.arange(r, h - r, stride)
+        ax = np.arange(r, w - r, stride)
+        yy, xx = np.meshgrid(ay, ax, indexing="ij")
+        yi = (yy + r + 1).ravel()
+        xi = (xx + r + 1).ravel()
+        y0 = (yy - r).ravel()
+        x0 = (xx - r).ravel()
+        box = (sat[:, yi, xi] - sat[:, y0, xi]
+               - sat[:, yi, x0] + sat[:, y0, x0])  # (n, A, 3)
+        pos = ((yy.ravel() * w + xx.ravel()) * 3)[None, :, None] \
+            + np.arange(3)[None, None, :] + 1
+        n_anchors = len(ay) * len(ax) * 3
+        mass = box.sum(axis=(1, 2))
+        chk = (box * pos).sum(axis=(1, 2))
+        return [(k, n_anchors, int(mass[k]), int(chk[k]))
+                for k in range(len(px))]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 def median_checksums(images: DataFrame) -> DataFrame:
@@ -1187,36 +959,23 @@ def median_checksums(images: DataFrame) -> DataFrame:
         T.StructField("checksum", T.LongType()),
     ])
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            rows = [None] * len(pdf)
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                g = _decode_stack(pdf, idx, w, h, fmt)[:, :, :, 1] \
-                    .astype(np.int64)                     # (n, h, w)
-                nb = np.stack([g[:, 1 + dy:h - 1 + dy, 1 + dx:w - 1 + dx]
-                               for dy in (-1, 0, 1) for dx in (-1, 0, 1)],
-                              axis=-1)                    # (n,h-2,w-2,9)
-                med = np.sort(nb, axis=-1)[..., 4]
-                ctr = g[:, 1:h - 1, 1:w - 1]
-                diff = np.abs(med - ctr)
-                ypos, xpos = np.meshgrid(np.arange(1, h - 1),
-                                         np.arange(1, w - 1), indexing="ij")
-                pos = (ypos * w + xpos + 1)[None, :, :]
-                n_int = (h - 2) * (w - 2)
-                for k, i in enumerate(idx):
-                    rows[i] = (ids[i], n_int,
-                               int((diff[k] > 0).sum()),
-                               int(diff[k].sum()),
-                               int((med[k] * pos[0]).sum()))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        g = px[:, :, :, 1].astype(np.int64)       # (n, h, w)
+        nb = np.stack([g[:, 1 + dy:h - 1 + dy, 1 + dx:w - 1 + dx]
+                       for dy in (-1, 0, 1) for dx in (-1, 0, 1)],
+                      axis=-1)                    # (n,h-2,w-2,9)
+        med = np.sort(nb, axis=-1)[..., 4]
+        ctr = g[:, 1:h - 1, 1:w - 1]
+        diff = np.abs(med - ctr)
+        ypos, xpos = np.meshgrid(np.arange(1, h - 1),
+                                 np.arange(1, w - 1), indexing="ij")
+        pos = (ypos * w + xpos + 1)[None, :, :]
+        n_int = (h - 2) * (w - 2)
+        return [(k, n_int, int((diff[k] > 0).sum()), int(diff[k].sum()),
+                 int((med[k] * pos[0]).sum()))
+                for k in range(len(px))]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 def hash_family_checksums(images: DataFrame) -> DataFrame:
@@ -1241,33 +1000,21 @@ def hash_family_checksums(images: DataFrame) -> DataFrame:
         T.StructField("d_chk", T.LongType()),
     ])
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            rows = [None] * len(pdf)
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                bh, bw = h // 8, w // 8
-                g = _decode_stack(pdf, idx, w, h, fmt)[:, :, :, 1] \
-                    .astype(np.int64)
-                s = g.reshape(len(idx), 8, bh, 8, bw).sum(axis=(2, 4))
-                tot = s.sum(axis=(1, 2), keepdims=True)   # (n,1,1)
-                a = s * 64 > tot                          # (n,8,8)
-                d = s > np.roll(s, -1, axis=2)
-                kpos = (np.arange(8)[:, None] * 8
-                        + np.arange(8)[None, :] + 1)[None, :, :]
-                for k, i in enumerate(idx):
-                    rows[i] = (ids[i], int(a[k].sum()), int(d[k].sum()),
-                               int((a[k] != d[k]).sum()),
-                               int((a[k] * kpos[0]).sum()),
-                               int((d[k] * kpos[0]).sum()))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        bh, bw = h // 8, w // 8
+        g = px[:, :, :, 1].astype(np.int64)
+        s = g.reshape(len(px), 8, bh, 8, bw).sum(axis=(2, 4))
+        tot = s.sum(axis=(1, 2), keepdims=True)   # (n,1,1)
+        a = s * 64 > tot                          # (n,8,8)
+        d = s > np.roll(s, -1, axis=2)
+        kpos = (np.arange(8)[:, None] * 8
+                + np.arange(8)[None, :] + 1)[None, :, :]
+        return [(k, int(a[k].sum()), int(d[k].sum()),
+                 int((a[k] != d[k]).sum()),
+                 int((a[k] * kpos[0]).sum()),
+                 int((d[k] * kpos[0]).sum())) for k in range(len(px))]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 SSIM_C1 = 6.5025     # (0.01 * 255)^2
@@ -1293,39 +1040,28 @@ def ssim_requant_checksums(images: DataFrame) -> DataFrame:
         T.StructField("ssim_q_min", T.LongType()),
     ])
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            rows = [None] * len(pdf)
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                x = _decode_stack(pdf, idx, w, h, fmt)[:, :, :, 1] \
-                    .astype(np.int64)
-                y = (x // 4) * 4 + 2
-                def bsum(a):
-                    return (a.reshape(len(idx), h // 8, 8, w // 8, 8)
-                            .sum(axis=(2, 4)))
-                bx, by = bsum(x), bsum(y)
-                sxx, syy, sxy = bsum(x * x), bsum(y * y), bsum(x * y)
-                mux = bx / 64.0
-                muy = by / 64.0
-                vx = sxx / 64.0 - mux * mux
-                vy = syy / 64.0 - muy * muy
-                cxy = sxy / 64.0 - mux * muy
-                num = (2.0 * mux * muy + SSIM_C1) * (2.0 * cxy + SSIM_C2)
-                den = (mux * mux + muy * muy + SSIM_C1) * (vx + vy + SSIM_C2)
-                q = np.floor((num / den) * SSIM_Q).astype(np.int64)
-                nb = (h // 8) * (w // 8)
-                for k, i in enumerate(idx):
-                    rows[i] = (ids[i], nb, int(q[k].sum()),
-                               int(q[k].min()))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        x = px[:, :, :, 1].astype(np.int64)
+        y = (x // 4) * 4 + 2
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+        def bsum(a):
+            return (a.reshape(len(px), h // 8, 8, w // 8, 8)
+                    .sum(axis=(2, 4)))
+        bx, by = bsum(x), bsum(y)
+        sxx, syy, sxy = bsum(x * x), bsum(y * y), bsum(x * y)
+        mux = bx / 64.0
+        muy = by / 64.0
+        vx = sxx / 64.0 - mux * mux
+        vy = syy / 64.0 - muy * muy
+        cxy = sxy / 64.0 - mux * muy
+        num = (2.0 * mux * muy + SSIM_C1) * (2.0 * cxy + SSIM_C2)
+        den = (mux * mux + muy * muy + SSIM_C1) * (vx + vy + SSIM_C2)
+        q = np.floor((num / den) * SSIM_Q).astype(np.int64)
+        nb = (h // 8) * (w // 8)
+        return [(k, nb, int(q[k].sum()), int(q[k].min()))
+                for k in range(len(px))]
+
+    return shape_grouped(images, schema, kernel)
 
 
 HOUGH_THRESH = 208                       # edge mask: v >= THRESH
@@ -1363,37 +1099,28 @@ def hough_votes(images: DataFrame, thresh: int = HOUGH_THRESH,
     ])
     tab = np.array(HOUGH_TAB, dtype=np.int64)
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            out: list = []
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                g = _decode_stack(pdf, idx, w, h, fmt)[:, :, :, 1] \
-                    .astype(np.int64)
-                for k, i in enumerate(idx):
-                    yy, xx = np.nonzero(g[k] >= thresh)
-                    n_edges = len(xx)
-                    # (E, T) fixed-point rho, positive by construction
-                    rq = (xx[:, None] * tab[None, :, 1]
-                          + yy[:, None] * tab[None, :, 2] + HOUGH_OFF)
-                    bucket = rq // HOUGH_RHO_Q
-                    key = tab[None, :, 0] * (1 << 20) + bucket
-                    uk, cnt = np.unique(key.ravel(), return_counts=True)
-                    order = np.lexsort((uk % (1 << 20), uk >> 20, -cnt))
-                    for r in range(min(topk, len(uk))):
-                        j = order[r]
-                        out.append((ids[i], n_edges, r + 1,
-                                    int(uk[j] >> 20),
-                                    int(uk[j] % (1 << 20)),
-                                    int(cnt[j])))
-            yield pd.DataFrame(out, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        g = px[:, :, :, 1].astype(np.int64)
+        rows = []
+        for k in range(len(px)):
+            yy, xx = np.nonzero(g[k] >= thresh)
+            n_edges = len(xx)
+            # (E, T) fixed-point rho, positive by construction
+            rq = (xx[:, None] * tab[None, :, 1]
+                  + yy[:, None] * tab[None, :, 2] + HOUGH_OFF)
+            bucket = rq // HOUGH_RHO_Q
+            key = tab[None, :, 0] * (1 << 20) + bucket
+            uk, cnt = np.unique(key.ravel(), return_counts=True)
+            order = np.lexsort((uk % (1 << 20), uk >> 20, -cnt))
+            for r in range(min(topk, len(uk))):
+                j = order[r]
+                rows.append((k, n_edges, r + 1,
+                             int(uk[j] >> 20),
+                             int(uk[j] % (1 << 20)),
+                             int(cnt[j])))
+        return rows
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 def bilinear_checksums(images: DataFrame) -> DataFrame:
@@ -1410,42 +1137,31 @@ def bilinear_checksums(images: DataFrame) -> DataFrame:
         T.StructField("cs_up", T.LongType()),
     ])
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            rows = [None] * len(pdf)
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                px = _decode_stack(pdf, idx, w, h, fmt).astype(np.int64)
-                oy = np.arange(2 * h)
-                ox = np.arange(2 * w)
-                i0 = oy // 2
-                j0 = ox // 2
-                i1 = np.minimum(i0 + 1, h - 1)
-                j1 = np.minimum(j0 + 1, w - 1)
-                di = (oy % 2)[:, None, None]      # (2h,1,1)
-                dj = (ox % 2)[None, :, None]      # (1,2w,1)
-                p00 = px[:, i0][:, :, j0]
-                p01 = px[:, i0][:, :, j1]
-                p10 = px[:, i1][:, :, j0]
-                p11 = px[:, i1][:, :, j1]
-                a = (2 - di) * (2 - dj)
-                b = (2 - di) * dj
-                c = di * (2 - dj)
-                d = di * dj
-                out4 = a * p00 + b * p01 + c * p10 + d * p11
-                wts = _aug_weights(2 * h, 2 * w)
-                cs = np.einsum("nhwc,hwc->n", out4, wts)
-                mass = out4.sum(axis=(1, 2, 3))
-                for k, i in enumerate(idx):
-                    rows[i] = (ids[i], int(mass[k]), int(cs[k]))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        px = px.astype(np.int64)
+        oy = np.arange(2 * h)
+        ox = np.arange(2 * w)
+        i0 = oy // 2
+        j0 = ox // 2
+        i1 = np.minimum(i0 + 1, h - 1)
+        j1 = np.minimum(j0 + 1, w - 1)
+        di = (oy % 2)[:, None, None]      # (2h,1,1)
+        dj = (ox % 2)[None, :, None]      # (1,2w,1)
+        p00 = px[:, i0][:, :, j0]
+        p01 = px[:, i0][:, :, j1]
+        p10 = px[:, i1][:, :, j0]
+        p11 = px[:, i1][:, :, j1]
+        a = (2 - di) * (2 - dj)
+        b = (2 - di) * dj
+        c = di * (2 - dj)
+        d = di * dj
+        out4 = a * p00 + b * p01 + c * p10 + d * p11
+        wts = _aug_weights(2 * h, 2 * w)
+        cs = np.einsum("nhwc,hwc->n", out4, wts)
+        mass = out4.sum(axis=(1, 2, 3))
+        return [(k, int(mass[k]), int(cs[k])) for k in range(len(px))]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 def moment_stats(images: DataFrame) -> DataFrame:
@@ -1463,33 +1179,21 @@ def moment_stats(images: DataFrame) -> DataFrame:
         T.StructField("m11", T.LongType()),
     ])
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            rows = [None] * len(pdf)
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                g = _decode_stack(pdf, idx, w, h, fmt).astype(
-                    np.int64)[:, :, :, 1]
-                y = np.arange(h, dtype=np.int64)[:, None]
-                x = np.arange(w, dtype=np.int64)[None, :]
-                m00 = g.sum(axis=(1, 2))
-                m10 = (g * x).sum(axis=(1, 2))
-                m01 = (g * y).sum(axis=(1, 2))
-                m20 = (g * x * x).sum(axis=(1, 2))
-                m02 = (g * y * y).sum(axis=(1, 2))
-                m11 = (g * x * y).sum(axis=(1, 2))
-                for k, i in enumerate(idx):
-                    rows[i] = (ids[i], int(m00[k]), int(m10[k]),
-                               int(m01[k]), int(m20[k]), int(m02[k]),
-                               int(m11[k]))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        g = px.astype(np.int64)[:, :, :, 1]
+        y = np.arange(h, dtype=np.int64)[:, None]
+        x = np.arange(w, dtype=np.int64)[None, :]
+        m00 = g.sum(axis=(1, 2))
+        m10 = (g * x).sum(axis=(1, 2))
+        m01 = (g * y).sum(axis=(1, 2))
+        m20 = (g * x * x).sum(axis=(1, 2))
+        m02 = (g * y * y).sum(axis=(1, 2))
+        m11 = (g * x * y).sum(axis=(1, 2))
+        return [(k, int(m00[k]), int(m10[k]), int(m01[k]),
+                 int(m20[k]), int(m02[k]), int(m11[k]))
+                for k in range(len(px))]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 def pyramid_checksums(images: DataFrame, levels: int = 3) -> DataFrame:
@@ -1509,34 +1213,25 @@ def pyramid_checksums(images: DataFrame, levels: int = 3) -> DataFrame:
         T.StructField("checksum", T.LongType()),
     ])
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            out = []
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                px = _decode_stack(pdf, idx, w, h, fmt).astype(np.int64)
-                for lv in range(1, levels + 1):
-                    f = 1 << lv
-                    hl, wl = h // f, w // f
-                    s = px.reshape(len(idx), hl, f, wl, f, 3) \
-                          .sum(axis=(2, 4))            # (n, hl, wl, 3)
-                    yy = np.arange(hl, dtype=np.int64)[:, None, None]
-                    xx = np.arange(wl, dtype=np.int64)[None, :, None]
-                    cc = np.arange(3, dtype=np.int64)[None, None, :]
-                    wgt = (yy * wl + xx) * 3 + cc + 1
-                    chk = (s * wgt).sum(axis=(1, 2, 3))
-                    mx = s.max(axis=(1, 2, 3))
-                    for k, i in enumerate(idx):
-                        out.append((ids[i], lv, hl * wl * 3,
-                                    int(mx[k]), int(chk[k])))
-            yield pd.DataFrame(out, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        px = px.astype(np.int64)
+        rows = []
+        for lv in range(1, levels + 1):
+            f = 1 << lv
+            hl, wl = h // f, w // f
+            s = px.reshape(len(px), hl, f, wl, f, 3) \
+                  .sum(axis=(2, 4))            # (n, hl, wl, 3)
+            yy = np.arange(hl, dtype=np.int64)[:, None, None]
+            xx = np.arange(wl, dtype=np.int64)[None, :, None]
+            cc = np.arange(3, dtype=np.int64)[None, None, :]
+            wgt = (yy * wl + xx) * 3 + cc + 1
+            chk = (s * wgt).sum(axis=(1, 2, 3))
+            mx = s.max(axis=(1, 2, 3))
+            rows += [(k, lv, hl * wl * 3, int(mx[k]), int(chk[k]))
+                     for k in range(len(px))]
+        return rows
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 def wht_checksums(images: DataFrame) -> DataFrame:
@@ -1563,37 +1258,25 @@ def wht_checksums(images: DataFrame) -> DataFrame:
             pop[a, b] = bin(a & b).count("1")
     S = 1 - 2 * (pop % 2)                                # (8, 8) +-1
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            rows = [None] * len(pdf)
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                hb, wb = h // 8, w // 8
-                g = _decode_stack(pdf, idx, w, h, fmt).astype(
-                    np.int64)[:, :, :, 1]                # (n, h, w)
-                r = g.reshape(len(idx), hb, 8, wb, 8)
-                coef = np.einsum("uy,nbyax,vx->nbuav", S, r, S)
-                a = np.abs(coef)                         # (n,hb,8,wb,8)
-                dc = coef[:, :, 0, :, 0].sum(axis=(1, 2))
-                satd = a.sum(axis=(1, 2, 3, 4))
-                by = np.arange(hb, dtype=np.int64)
-                bx = np.arange(wb, dtype=np.int64)
-                wgt = ((by[:, None, None, None] * wb
-                        + bx[None, None, :, None]) * 64
-                       + u[None, :, None, None] * 8
-                       + u[None, None, None, :] + 1)     # (hb,8,wb,8)
-                chk = (a * wgt[None]).sum(axis=(1, 2, 3, 4))
-                for k, i in enumerate(idx):
-                    rows[i] = (ids[i], hb * wb, int(dc[k]),
-                               int(satd[k]), int(chk[k]))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        hb, wb = h // 8, w // 8
+        g = px.astype(np.int64)[:, :, :, 1]      # (n, h, w)
+        r = g.reshape(len(px), hb, 8, wb, 8)
+        coef = np.einsum("uy,nbyax,vx->nbuav", S, r, S)
+        a = np.abs(coef)                         # (n,hb,8,wb,8)
+        dc = coef[:, :, 0, :, 0].sum(axis=(1, 2))
+        satd = a.sum(axis=(1, 2, 3, 4))
+        by = np.arange(hb, dtype=np.int64)
+        bx = np.arange(wb, dtype=np.int64)
+        wgt = ((by[:, None, None, None] * wb
+                + bx[None, None, :, None]) * 64
+               + u[None, :, None, None] * 8
+               + u[None, None, None, :] + 1)     # (hb,8,wb,8)
+        chk = (a * wgt[None]).sum(axis=(1, 2, 3, 4))
+        return [(k, hb * wb, int(dc[k]), int(satd[k]), int(chk[k]))
+                for k in range(len(px))]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 def whitebalance_checksums(images: DataFrame) -> DataFrame:
@@ -1613,34 +1296,23 @@ def whitebalance_checksums(images: DataFrame) -> DataFrame:
         T.StructField("checksum", T.LongType()),
     ])
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            rows = [None] * len(pdf)
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                px = _decode_stack(pdf, idx, w, h, fmt).astype(np.int64)
-                cs = np.maximum(px.sum(axis=(1, 2)), 1)  # (n, 3)
-                tot = cs.sum(axis=1, keepdims=True)      # (n, 1)
-                gain = (tot * 1024) // (3 * cs)          # (n, 3)
-                scaled = (px * gain[:, None, None, :]) // 1024
-                bal = np.minimum(scaled, 255)
-                clip = (scaled > 255).sum(axis=(1, 2, 3))
-                yy = np.arange(h, dtype=np.int64)[:, None, None]
-                xx = np.arange(w, dtype=np.int64)[None, :, None]
-                cc = np.arange(3, dtype=np.int64)[None, None, :]
-                wgt = (yy * w + xx) * 3 + cc + 1
-                chk = (bal * wgt).sum(axis=(1, 2, 3))
-                for k, i in enumerate(idx):
-                    rows[i] = (ids[i], int(gain[k, 0]), int(gain[k, 1]),
-                               int(gain[k, 2]), int(clip[k]), int(chk[k]))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        px = px.astype(np.int64)
+        cs = np.maximum(px.sum(axis=(1, 2)), 1)  # (n, 3)
+        tot = cs.sum(axis=1, keepdims=True)      # (n, 1)
+        gain = (tot * 1024) // (3 * cs)          # (n, 3)
+        scaled = (px * gain[:, None, None, :]) // 1024
+        bal = np.minimum(scaled, 255)
+        clip = (scaled > 255).sum(axis=(1, 2, 3))
+        yy = np.arange(h, dtype=np.int64)[:, None, None]
+        xx = np.arange(w, dtype=np.int64)[None, :, None]
+        cc = np.arange(3, dtype=np.int64)[None, None, :]
+        wgt = (yy * w + xx) * 3 + cc + 1
+        chk = (bal * wgt).sum(axis=(1, 2, 3))
+        return [(k, int(gain[k, 0]), int(gain[k, 1]), int(gain[k, 2]),
+                 int(clip[k]), int(chk[k])) for k in range(len(px))]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 def demosaic_checksums(images: DataFrame) -> DataFrame:
@@ -1661,53 +1333,42 @@ def demosaic_checksums(images: DataFrame) -> DataFrame:
         T.StructField("checksum", T.LongType()),
     ])
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            rows = [None] * len(pdf)
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                px = _decode_stack(pdf, idx, w, h, fmt).astype(np.int64)
-                yy = np.arange(h, dtype=np.int64)[:, None]
-                xx = np.arange(w, dtype=np.int64)[None, :]
-                cfa = np.where((yy % 2 == 0) & (xx % 2 == 0), 0,
-                               np.where((yy % 2 == 1) & (xx % 2 == 1),
-                                        2, 1))            # (h, w)
-                mos = np.take_along_axis(
-                    px, cfa[None, :, :, None], axis=3)[..., 0]  # (n,h,w)
-                n = len(idx)
-                hi, wi = h - 2, w - 2                      # interior dims
-                rec = np.zeros((n, hi, wi, 3), dtype=np.int64)
-                for c in range(3):
-                    ssum = np.zeros((n, hi, wi), dtype=np.int64)
-                    cnt = np.zeros((hi, wi), dtype=np.int64)
-                    for dy in (-1, 0, 1):
-                        for dx in (-1, 0, 1):
-                            hit = (cfa[1 + dy:h - 1 + dy,
-                                       1 + dx:w - 1 + dx] == c)
-                            ssum += np.where(
-                                hit[None],
-                                mos[:, 1 + dy:h - 1 + dy,
-                                    1 + dx:w - 1 + dx], 0)
-                            cnt += hit
-                    rec[..., c] = (4 * ssum) // cnt
-                truth = px[:, 1:h - 1, 1:w - 1, :]
-                sad = np.abs(rec - 4 * truth).sum(axis=(1, 2, 3))
-                iy = np.arange(1, h - 1, dtype=np.int64)[:, None, None]
-                ix = np.arange(1, w - 1, dtype=np.int64)[None, :, None]
-                cc = np.arange(3, dtype=np.int64)[None, None, :]
-                wgt = (iy * w + ix) * 3 + cc + 1
-                chk = (rec * wgt).sum(axis=(1, 2, 3))
-                for k, i in enumerate(idx):
-                    rows[i] = (ids[i], hi * wi * 3, int(sad[k]),
-                               int(chk[k]))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        px = px.astype(np.int64)
+        yy = np.arange(h, dtype=np.int64)[:, None]
+        xx = np.arange(w, dtype=np.int64)[None, :]
+        cfa = np.where((yy % 2 == 0) & (xx % 2 == 0), 0,
+                       np.where((yy % 2 == 1) & (xx % 2 == 1),
+                                2, 1))            # (h, w)
+        mos = np.take_along_axis(
+            px, cfa[None, :, :, None], axis=3)[..., 0]  # (n,h,w)
+        n = len(px)
+        hi, wi = h - 2, w - 2                      # interior dims
+        rec = np.zeros((n, hi, wi, 3), dtype=np.int64)
+        for c in range(3):
+            ssum = np.zeros((n, hi, wi), dtype=np.int64)
+            cnt = np.zeros((hi, wi), dtype=np.int64)
+            for dy in (-1, 0, 1):
+                for dx in (-1, 0, 1):
+                    hit = (cfa[1 + dy:h - 1 + dy,
+                               1 + dx:w - 1 + dx] == c)
+                    ssum += np.where(
+                        hit[None],
+                        mos[:, 1 + dy:h - 1 + dy,
+                            1 + dx:w - 1 + dx], 0)
+                    cnt += hit
+            rec[..., c] = (4 * ssum) // cnt
+        truth = px[:, 1:h - 1, 1:w - 1, :]
+        sad = np.abs(rec - 4 * truth).sum(axis=(1, 2, 3))
+        iy = np.arange(1, h - 1, dtype=np.int64)[:, None, None]
+        ix = np.arange(1, w - 1, dtype=np.int64)[None, :, None]
+        cc = np.arange(3, dtype=np.int64)[None, None, :]
+        wgt = (iy * w + ix) * 3 + cc + 1
+        chk = (rec * wgt).sum(axis=(1, 2, 3))
+        return [(k, hi * wi * 3, int(sad[k]), int(chk[k]))
+                for k in range(n)]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 BRIEF_K = 24
@@ -1726,32 +1387,21 @@ def brief_checksums(images: DataFrame, k: int = BRIEF_K) -> DataFrame:
         T.StructField("desc", T.LongType()),
         T.StructField("pop", T.LongType()),
     ])
+    j = np.arange(k, dtype=np.int64)
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            rows = [None] * len(pdf)
-            j = np.arange(k, dtype=np.int64)
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                px = _decode_stack(pdf, idx, w, h, fmt).astype(np.int64)
-                luma = 2 * px[..., 0] + 5 * px[..., 1] + px[..., 2]
-                x1, y1 = (j * 7919) % w, (j * 104729) % h
-                x2, y2 = (j * 1299709 + 17) % w, (j * 15485863 + 29) % h
-                g1 = luma[:, y1, x1]                       # (n, k)
-                g2 = luma[:, y2, x2]
-                bits = (g1 > g2).astype(np.int64)
-                desc = bits @ (np.int64(1) << j)
-                pop = bits.sum(axis=1)
-                for t, i in enumerate(idx):
-                    rows[i] = (ids[i], int(desc[t]), int(pop[t]))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        px = px.astype(np.int64)
+        luma = 2 * px[..., 0] + 5 * px[..., 1] + px[..., 2]
+        x1, y1 = (j * 7919) % w, (j * 104729) % h
+        x2, y2 = (j * 1299709 + 17) % w, (j * 15485863 + 29) % h
+        g1 = luma[:, y1, x1]                       # (n, k)
+        g2 = luma[:, y2, x2]
+        bits = (g1 > g2).astype(np.int64)
+        desc = bits @ (np.int64(1) << j)
+        pop = bits.sum(axis=1)
+        return [(t, int(desc[t]), int(pop[t])) for t in range(len(px))]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 def shear_checksums(images: DataFrame, shift_div: int = 4) -> DataFrame:
@@ -1769,37 +1419,26 @@ def shear_checksums(images: DataFrame, shift_div: int = 4) -> DataFrame:
         T.StructField("checksum", T.LongType()),
     ])
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            rows = [None] * len(pdf)
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                px = _decode_stack(pdf, idx, w, h, fmt).astype(np.int64)
-                yy = np.arange(h, dtype=np.int64)[:, None]
-                xx = np.arange(w, dtype=np.int64)[None, :]
-                sx = xx - yy // shift_div                  # (h, w)
-                ok = (sx >= 0) & (sx < w)
-                gx = np.clip(sx, 0, w - 1)
-                warped = np.take_along_axis(
-                    px, np.broadcast_to(
-                        gx[None, :, :, None],
-                        (len(idx), h, w, 3)).copy(), axis=2)
-                warped *= ok[None, :, :, None]
-                wgt = (((yy * w + xx) * 3)[:, :, None]
-                       + np.arange(3, dtype=np.int64)[None, None, :] + 1)
-                mass = warped.sum(axis=(1, 2, 3))
-                chk = (warped * wgt[None]).sum(axis=(1, 2, 3))
-                for t, i in enumerate(idx):
-                    rows[i] = (ids[i], h * w * 3, int(mass[t]),
-                               int(chk[t]))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        px = px.astype(np.int64)
+        yy = np.arange(h, dtype=np.int64)[:, None]
+        xx = np.arange(w, dtype=np.int64)[None, :]
+        sx = xx - yy // shift_div                  # (h, w)
+        ok = (sx >= 0) & (sx < w)
+        gx = np.clip(sx, 0, w - 1)
+        warped = np.take_along_axis(
+            px, np.broadcast_to(
+                gx[None, :, :, None],
+                (len(px), h, w, 3)).copy(), axis=2)
+        warped *= ok[None, :, :, None]
+        wgt = (((yy * w + xx) * 3)[:, :, None]
+               + np.arange(3, dtype=np.int64)[None, None, :] + 1)
+        mass = warped.sum(axis=(1, 2, 3))
+        chk = (warped * wgt[None]).sum(axis=(1, 2, 3))
+        return [(t, h * w * 3, int(mass[t]), int(chk[t]))
+                for t in range(len(px))]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 def haar_band_energies(images: DataFrame) -> DataFrame:
@@ -1819,44 +1458,33 @@ def haar_band_energies(images: DataFrame) -> DataFrame:
         T.StructField("ll_checksum", T.LongType()),
     ])
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            rows = [None] * len(pdf)
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                px = _decode_stack(pdf, idx, w, h, fmt).astype(np.int64)
-                a = px[:, 0::2, 0::2, :]
-                b = px[:, 0::2, 1::2, :]
-                c = px[:, 1::2, 0::2, :]
-                d = px[:, 1::2, 1::2, :]
-                ll = a + b + c + d
-                lh = a - b + c - d
-                hl = a + b - c - d
-                hh = a - b - c + d
-                hb, wb = h // 2, w // 2
-                by = np.arange(hb, dtype=np.int64)[:, None, None]
-                bx = np.arange(wb, dtype=np.int64)[None, :, None]
-                cc = np.arange(3, dtype=np.int64)[None, None, :]
-                wgt = (by * wb + bx) * 3 + cc + 1
-                rows_idx = {
-                    "e_ll": (ll * ll), "e_lh": (lh * lh),
-                    "e_hl": (hl * hl), "e_hh": (hh * hh)}
-                sums = {k: v.sum(axis=(1, 2, 3)) for k, v in
-                        rows_idx.items()}
-                chk = (ll * wgt[None]).sum(axis=(1, 2, 3))
-                for t, i in enumerate(idx):
-                    rows[i] = (ids[i], hb * wb * 3,
-                               int(sums["e_ll"][t]), int(sums["e_lh"][t]),
-                               int(sums["e_hl"][t]), int(sums["e_hh"][t]),
-                               int(chk[t]))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        px = px.astype(np.int64)
+        a = px[:, 0::2, 0::2, :]
+        b = px[:, 0::2, 1::2, :]
+        c = px[:, 1::2, 0::2, :]
+        d = px[:, 1::2, 1::2, :]
+        ll = a + b + c + d
+        lh = a - b + c - d
+        hl = a + b - c - d
+        hh = a - b - c + d
+        hb, wb = h // 2, w // 2
+        by = np.arange(hb, dtype=np.int64)[:, None, None]
+        bx = np.arange(wb, dtype=np.int64)[None, :, None]
+        cc = np.arange(3, dtype=np.int64)[None, None, :]
+        wgt = (by * wb + bx) * 3 + cc + 1
+        rows_idx = {
+            "e_ll": (ll * ll), "e_lh": (lh * lh),
+            "e_hl": (hl * hl), "e_hh": (hh * hh)}
+        sums = {k: v.sum(axis=(1, 2, 3)) for k, v in
+                rows_idx.items()}
+        chk = (ll * wgt[None]).sum(axis=(1, 2, 3))
+        return [(t, hb * wb * 3,
+                 int(sums["e_ll"][t]), int(sums["e_lh"][t]),
+                 int(sums["e_hl"][t]), int(sums["e_hh"][t]),
+                 int(chk[t])) for t in range(len(px))]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 SEAM_ROWS = 12
@@ -1883,37 +1511,25 @@ def seam_carve_costs(images: DataFrame) -> DataFrame:
     ])
     big = np.int64(1_000_000_000)
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            rows = [None] * len(pdf)
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                px = _decode_stack(pdf, idx, w, h, fmt) \
-                    .astype(np.int64)[:, :SEAM_ROWS, :, 0]   # (n, R, w)
-                n = px.shape[0]
-                left = px[:, :, np.maximum(np.arange(w) - 1, 0)]
-                right = px[:, :, np.minimum(np.arange(w) + 1, w - 1)]
-                e = np.abs(right - left)
-                m = e[:, 0, :].copy()
-                pad = np.full((n, 1), big, dtype=np.int64)
-                for r in range(1, SEAM_ROWS):
-                    upl = np.concatenate([pad, m[:, :-1]], axis=1)
-                    upr = np.concatenate([m[:, 1:], pad], axis=1)
-                    m = e[:, r, :] + np.minimum(np.minimum(upl, m), upr)
-                j = np.arange(w, dtype=np.int64)
-                packed = (m * 256 + j).min(axis=1)
-                chk = (m * (j + 1)).sum(axis=1)
-                for t, i in enumerate(idx):
-                    rows[i] = (ids[i], w, int(packed[t] // 256),
-                               int(packed[t] % 256), int(chk[t]))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        px = px.astype(np.int64)[:, :SEAM_ROWS, :, 0]   # (n, R, w)
+        n = px.shape[0]
+        left = px[:, :, np.maximum(np.arange(w) - 1, 0)]
+        right = px[:, :, np.minimum(np.arange(w) + 1, w - 1)]
+        e = np.abs(right - left)
+        m = e[:, 0, :].copy()
+        pad = np.full((n, 1), big, dtype=np.int64)
+        for r in range(1, SEAM_ROWS):
+            upl = np.concatenate([pad, m[:, :-1]], axis=1)
+            upr = np.concatenate([m[:, 1:], pad], axis=1)
+            m = e[:, r, :] + np.minimum(np.minimum(upl, m), upr)
+        j = np.arange(w, dtype=np.int64)
+        packed = (m * 256 + j).min(axis=1)
+        chk = (m * (j + 1)).sum(axis=1)
+        return [(t, w, int(packed[t] // 256), int(packed[t] % 256),
+                 int(chk[t])) for t in range(n)]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 def dhash_codes(images: DataFrame) -> DataFrame:
@@ -1928,27 +1544,15 @@ def dhash_codes(images: DataFrame) -> DataFrame:
     ])
     wts = (np.int64(1) << np.arange(63, dtype=np.int64))
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            rows = [None] * len(pdf)
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                bh, bw = h // 8, w // 8
-                g = _decode_stack(pdf, idx, w, h, fmt)[:, :, :, 1] \
-                    .astype(np.int64)
-                s = g.reshape(len(idx), 8, bh, 8, bw).sum(axis=(2, 4))
-                d = (s > np.roll(s, -1, axis=2)).reshape(len(idx), 64)
-                codes = (d[:, :63] * wts).sum(axis=1)
-                for k, i in enumerate(idx):
-                    rows[i] = (ids[i], int(codes[k]))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        bh, bw = h // 8, w // 8
+        g = px[:, :, :, 1].astype(np.int64)
+        s = g.reshape(len(px), 8, bh, 8, bw).sum(axis=(2, 4))
+        d = (s > np.roll(s, -1, axis=2)).reshape(len(px), 64)
+        codes = (d[:, :63] * wts).sum(axis=1)
+        return [(k, int(codes[k])) for k in range(len(px))]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 MEDCUT_ROUNDS = 3
@@ -1973,41 +1577,32 @@ def median_cut_boxes(images: DataFrame) -> DataFrame:
         T.StructField("s2", T.LongType()),
     ])
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            out = []
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                px = _decode_stack(pdf, idx, w, h, fmt) \
-                    .astype(np.int64).reshape(len(idx), -1, 3)
-                for t, i in enumerate(idx):
-                    v = px[t]                       # (npx, 3)
-                    box = np.zeros(len(v), dtype=np.int64)
-                    for _ in range(MEDCUT_ROUNDS):
-                        nxt = box * 2
-                        for b in np.unique(box):
-                            m = box == b
-                            sub = v[m]
-                            rng = sub.max(axis=0) - sub.min(axis=0)
-                            wc = int((rng * 4 + (3 - np.arange(3)))
-                                     .argmax())
-                            vals = np.sort(sub[:, wc])
-                            med = int(vals[(len(vals) + 1) // 2 - 1])
-                            nxt[m] += (sub[:, wc] >= med).astype(np.int64)
-                        box = nxt
-                    for b in np.unique(box):
-                        m = box == b
-                        s = v[m].sum(axis=0)
-                        out.append((ids[i], int(b), int(m.sum()),
-                                    int(s[0]), int(s[1]), int(s[2])))
-            yield pd.DataFrame(out, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        px = px.astype(np.int64).reshape(len(px), -1, 3)
+        rows = []
+        for t in range(len(px)):
+            v = px[t]                       # (npx, 3)
+            box = np.zeros(len(v), dtype=np.int64)
+            for _ in range(MEDCUT_ROUNDS):
+                nxt = box * 2
+                for b in np.unique(box):
+                    m = box == b
+                    sub = v[m]
+                    rng = sub.max(axis=0) - sub.min(axis=0)
+                    wc = int((rng * 4 + (3 - np.arange(3)))
+                             .argmax())
+                    vals = np.sort(sub[:, wc])
+                    med = int(vals[(len(vals) + 1) // 2 - 1])
+                    nxt[m] += (sub[:, wc] >= med).astype(np.int64)
+                box = nxt
+            for b in np.unique(box):
+                m = box == b
+                s = v[m].sum(axis=0)
+                rows.append((t, int(b), int(m.sum()),
+                             int(s[0]), int(s[1]), int(s[2])))
+        return rows
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 def channel_moments(images: DataFrame) -> DataFrame:
@@ -2022,29 +1617,17 @@ def channel_moments(images: DataFrame) -> DataFrame:
         + [T.StructField(f"s{a}{b}", T.LongType())
            for a in range(3) for b in range(a, 3)])
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            rows = [None] * len(pdf)
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                v = _decode_stack(pdf, idx, w, h, fmt) \
-                    .astype(np.int64).reshape(len(idx), -1, 3)
-                s = v.sum(axis=1)
-                cross = np.einsum("npa,npb->nab", v, v)
-                for t, i in enumerate(idx):
-                    rows[i] = ((ids[i], w * h)
-                               + tuple(int(x) for x in s[t])
-                               + tuple(int(cross[t, a, b])
-                                       for a in range(3)
-                                       for b in range(a, 3)))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        v = px.astype(np.int64).reshape(len(px), -1, 3)
+        s = v.sum(axis=1)
+        cross = np.einsum("npa,npb->nab", v, v)
+        return [((t, w * h)
+                 + tuple(int(x) for x in s[t])
+                 + tuple(int(cross[t, a, b])
+                         for a in range(3)
+                         for b in range(a, 3))) for t in range(len(px))]
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)
 
 
 def channel0_hist(images: DataFrame) -> DataFrame:
@@ -2057,23 +1640,12 @@ def channel0_hist(images: DataFrame) -> DataFrame:
         T.StructField("cnt", T.LongType()),
     ])
 
-    def work(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["image_id"].to_numpy()
-            out = []
-            for (w, h, fmt), idx in pdf.groupby(["w", "h", "fmt"]) \
-                                       .indices.items():
-                w, h = int(w), int(h)
-                px = _decode_stack(pdf, idx, w, h, fmt)[:, :, :, 0] \
-                    .astype(np.int64)
-                for t, i in enumerate(idx):
-                    cnt = np.bincount(px[t].ravel(), minlength=256)
-                    for v in np.flatnonzero(cnt):
-                        out.append((ids[i], int(v), int(cnt[v])))
-            if out:
-                yield pd.DataFrame(out, columns=[f.name for f in schema])
+    def kernel(px, grp, w, h, fmt):
+        px = px[:, :, :, 0].astype(np.int64)
+        rows = []
+        for t in range(len(px)):
+            cnt = np.bincount(px[t].ravel(), minlength=256)
+            rows += [(t, int(v), int(cnt[v])) for v in np.flatnonzero(cnt)]
+        return rows
 
-    return (images.select("image_id", "bytes", "w", "h", "fmt")
-            .mapInPandas(work, schema))
+    return shape_grouped(images, schema, kernel)

@@ -10,9 +10,12 @@ Design (Spark-first, scale-first):
   cover is typically small → ``F.broadcast`` hint; AQE handles residual skew.
   At 100 TB the equi-join on int64 cells is the only shuffle, and it
   partitions by cell — spatial locality comes for free.
-* Exact PIP refinement runs as a grouped Arrow kernel (``applyInPandas`` by
-  poly_id): one vectorized numpy ray-cast per (polygon, candidate-point
-  batch) — no per-row Python.
+* Exact PIP refinement is a codegen'd even-odd parity predicate over the
+  polygon's edge columns, inlined into the join for polygons of up to
+  ``MAX_INLINE_EDGES`` edges (the distributed path sums it over edge chunks
+  for bigger ones).  Otherwise a shuffle-free ``mapInPandas`` kernel
+  (``_pip_refine``) groups candidates by poly_id WITHIN each Arrow batch
+  and ray-casts each group in one vectorized numpy call — no per-row Python.
 * ``knn_join`` ships two strategies: broadcast brute-force top-k (the RIGHT
   plan when the build side is a small dimension — Catalyst keeps it a single
   stage) and cell-ring expansion (the scale path when both sides are large).
@@ -587,7 +590,8 @@ def distance_join_cells(left: DataFrame, right: DataFrame, radius: float,
 
 def salt_hot_cells(df: DataFrame, cell_col: str, top_n: int = 8,
                    salt_factor: int = 16) -> tuple[DataFrame, DataFrame]:
-    """B13: detect the ``top_n`` densest cells (sampled count) and salt them.
+    """B13: detect the ``top_n`` densest cells (an exact ``groupBy().count()``
+    over all of ``df``) and salt them.
 
     Returns (salted probe df with ``_salted_cell``, hot-cell lookup df).
     Build side must explode hot cells × salt_factor to match (see

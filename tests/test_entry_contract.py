@@ -2,9 +2,10 @@
 queries() entry has matching columns with its oracle_sql(); iceberg-layout
 round-trip."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def test_entry_returns_rows(spark):

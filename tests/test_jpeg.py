@@ -278,3 +278,56 @@ def test_decode_batch_grayscale_group():
     for o, r in zip(out, refs):
         assert np.array_equal(o, r)
         assert o.shape == (16, 16, 3)       # Y replicated to RGB
+
+
+def _swap_luma_chroma_bindings(blob):
+    """Swap the Y and Cb (td, ta) table bindings in the SOS header: the
+    frame, tables and entropy bytes stay the same, only the scan's
+    component → table map changes."""
+    out = bytearray(blob)
+    sos = blob.index(b"\xFF\xDA")
+    assert out[sos + 4] == 3                 # Ns: Y, Cb, Cr
+    out[sos + 6], out[sos + 8] = out[sos + 8], out[sos + 6]
+    return bytes(out)
+
+
+def _assert_batch_matches_scalar(blobs):
+    """The batch path gives every stream's scalar pixels, or raises the
+    ValueError a scalar decode of one of the streams raises."""
+    refs = []
+    for b in blobs:
+        try:
+            refs.append(jpeg.jpeg_decode(b))
+        except ValueError:
+            with pytest.raises(ValueError):
+                jpeg.jpeg_decode_batch(blobs)
+            return
+    for o, r in zip(jpeg.jpeg_decode_batch(blobs), refs):
+        assert np.array_equal(o, r)
+
+
+def test_decode_batch_groups_by_scan_table_bindings():
+    """Streams that share frame and tables but bind them differently in
+    the SOS must not share a batch walker."""
+    rng = np.random.default_rng(8)
+    good = [jpeg.jpeg_encode(np.clip(rng.normal(128, 45, (32, 32, 3)), 0,
+                                     255).astype(np.uint8), 90)
+            for _ in range(16)]
+    mutated = [_swap_luma_chroma_bindings(b) for b in good]
+    _assert_batch_matches_scalar(good + mutated)
+    _assert_batch_matches_scalar(mutated)
+
+
+def test_decode_batch_missing_last_restart_marker():
+    """A stream with fewer RST markers than restart intervals: the scalar
+    path reads on past the last marker, and so must the batch walker."""
+    img = _smooth(32, 32, seed=5)
+    blob = jpeg.jpeg_encode(img, 90, restart_mcu=1)
+    sos = blob.index(b"\xFF\xDA")
+    last = max(i for i in range(sos, len(blob) - 1)
+               if blob[i] == 0xFF and 0xD0 <= blob[i + 1] <= 0xD7)
+    dropped = blob[:last] + blob[last + 2:]
+    ref = jpeg.jpeg_decode(dropped)
+    out = jpeg.jpeg_decode_batch([dropped] * 16)
+    for o in out:
+        assert np.array_equal(o, ref)

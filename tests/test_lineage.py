@@ -13,9 +13,10 @@ from pyspark.sql import functions as F
 
 from spark_shp import lineage
 
-DRIVER = """
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+DRIVER = f"""
 import sys, os, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {ROOT!r})
 out_dir, slow = sys.argv[1], sys.argv[2] == "slow"
 from pyspark.sql import functions as F
 from spark_shp.session import get_spark

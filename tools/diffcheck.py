@@ -8,9 +8,11 @@ Usage: python tools/diffcheck.py [sf_dir] [name_filter...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
 
@@ -37,7 +39,10 @@ def main():
     filters = sys.argv[2:]
 
     import duckdb
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
+    # the Python workers inherit the environment: import this checkout too
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
     import __spark_entry__ as entrymod
     from spark_shp.session import get_spark
 
